@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -29,11 +29,18 @@ object Arb {
       .withColumnRenamed("bookmaker", "best_bookmaker")
       .withColumnRenamed(priceCol, "best_price")
 
+  /** P8 (`src/analysis.py:44-51`): the margin is defined only when
+    * the market has exactly 2 outcomes and `total < 1`, reported as
+    * `(1-total)*100` rounded to 2. The one home of the rule for
+    * [[margins]] and [[summary]].
+    */
+  private def marginRule(total: Column, nOutcomes: Column): Column =
+    when(nOutcomes === 2 && total < 1,
+      round((lit(1.0) - total) * 100.0, 2))
+
   /** A4: per-game arbitrage summary over best-price rows.
-    * `total = Σ implied_prob` of the best prices; margin defined only
-    * when the market has exactly 2 outcomes (P8, `src/analysis.py:44-45`)
-    * and `total < 1`; reported as `(1-total)*100` rounded to 2
-    * (`src/analysis.py:51`). Emits the `web/app.py:50-71` summary shape.
+    * `total = Σ implied_prob` of the best prices, with the P8 margin
+    * ([[marginRule]]). Emits the `web/app.py:50-71` summary shape.
     */
   def margins(bestPriceRows: DataFrame,
               impliedCol: String = "implied_prob"): DataFrame =
@@ -45,22 +52,34 @@ object Arb {
         sum(col(impliedCol)).as("total_implied"),
         count(lit(1)).as("n_outcomes"))
       .withColumn("arbitrage_margin",
-        when(col("n_outcomes") === 2 && col("total_implied") < 1,
-          round((lit(1.0) - col("total_implied")) * 100.0, 2)))
+        marginRule(col("total_implied"), col("n_outcomes")))
 
-  /** Full flagship summary (`web/app.py:36-71`): best price rows joined
-    * back to per-game margins. The margins side is one row per game —
-    * unbounded at scale, so the join strategy is left to Catalyst/AQE
-    * (it broadcasts when the aggregate is actually small, and falls
-    * back to a shuffle join when "one row per game" means terabytes).
-    * Both sides already share hash-partitioning on game_id from the
-    * window/groupBy, so the shuffle case adds no extra exchange.
+  /** Full flagship summary (`web/app.py:36-71`): every best-price row
+    * carries its game's `total_implied`, `n_outcomes` and
+    * `arbitrage_margin` — [[margins]]' values as window aggregates over
+    * `partitionBy(game_id)`, so no join back. Rows with a null
+    * `game_id` get null margin columns, as a left join on `game_id`
+    * would give them. Columns are `game_id`, the other best-price
+    * columns, then the three margin columns.
+    *
+    * Plan shape (pinned in `PlanAuditSpec`): on an input already
+    * hash-partitioned on `game_id` — [[graft.sources.Snapshots.latest]]'s
+    * output, or any frame after a `game_id`-only window — the
+    * best-price window and the per-game window add no exchange, so
+    * latest → devig → summary plans one exchange (the history's) and
+    * no join. On any other input they take two: `parseMarket`'s
+    * `(game_id, outcome)` hash, then this window's `game_id` hash.
     */
   def summary(flattened: DataFrame,
               impliedCol: String = "implied_prob"): DataFrame = {
     val best = bestPrices(flattened)
-    val m = margins(best, impliedCol)
-      .select("game_id", "total_implied", "n_outcomes", "arbitrage_margin")
-    best.join(m, Seq("game_id"), "left")
+    val game = Window.partitionBy(col("game_id"))
+    val keyed = col("game_id").isNotNull
+    best
+      .select("game_id", best.columns.filter(_ != "game_id").toIndexedSeq: _*)
+      .withColumn("total_implied", when(keyed, sum(col(impliedCol)).over(game)))
+      .withColumn("n_outcomes", when(keyed, count(lit(1)).over(game)))
+      .withColumn("arbitrage_margin",
+        marginRule(col("total_implied"), col("n_outcomes")))
   }
 }

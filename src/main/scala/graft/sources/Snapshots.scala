@@ -41,14 +41,26 @@ object Snapshots {
     * appended batches share a timestamp for a key (row_number over a
     * tie is otherwise partitioning-dependent, like every unpinned
     * argmax — SURVEY §7.4).
+    *
+    * Partitioning contract: `keyCols` go coarsest first, and the
+    * output is hash-partitioned on `keyCols.head` alone. The history
+    * shuffles once on that column; the same hash satisfies the
+    * finer `keyCols` window here and every later window or aggregate
+    * whose keys include it (for the odds keys: Devig's
+    * `(game_id, bookmaker)`, `parseMarket`'s `(game_id, outcome)`,
+    * `Arb.summary`'s per-game margins), so none of them shuffles
+    * again. `QueriesCore.oddsBase` takes the same one-coarse-shuffle
+    * shape.
     */
   def latest(history: DataFrame, keyCols: Seq[String], tsCol: String,
              tieBreak: Seq[String] = Nil): DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    require(keyCols.nonEmpty, "latest: keyCols must name at least one column")
     val ordering = col(tsCol).desc +: tieBreak.map(col(_).desc)
     val w = Window.partitionBy(keyCols.map(col): _*)
       .orderBy(ordering: _*)
-    history.withColumn("__rn", row_number().over(w))
+    history.repartition(col(keyCols.head))
+      .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
   }
 
@@ -61,7 +73,9 @@ object Snapshots {
     * without bound and every `latest` view pays a window over the full
     * log; periodic compaction bounds that cost while `latest` semantics
     * stay identical. Writes to a temp sibling then swaps, so a reader
-    * never sees a half-written table.
+    * never sees a half-written table. `keyCols` follow [[latest]]'s
+    * contract (coarsest first); each written file holds whole
+    * `keyCols.head` groups, the hash partitions of that one shuffle.
     */
   def compact(spark: SparkSession, canonicalPath: String,
               keyCols: Seq[String], tsCol: String,

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 import org.scalacheck.Gen
 import graft.operators.{Arb, Devig}
@@ -183,6 +183,131 @@ class DevigArbPropertySpec extends SparkSpec {
         assert(got(key) == expected,
           s"$key: got ${got(key)} expected $expected from $grp")
       }
+    }
+  }
+
+  // ---- Arb.summary vs the groupBy + left-join formulation ----
+
+  /** The former `Arb.summary`, kept here only as the oracle: per-game
+    * groupBy margins joined back to the best-price rows on game_id.
+    */
+  private def joinedSummary(flattened: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions._
+    val best = Arb.bestPrices(flattened)
+    val m = best.groupBy(col("game_id"))
+      .agg(sum(col("implied_prob")).as("total_implied"),
+        count(lit(1)).as("n_outcomes"))
+      .withColumn("arbitrage_margin",
+        when(col("n_outcomes") === 2 && col("total_implied") < 1,
+          round((lit(1.0) - col("total_implied")) * 100.0, 2)))
+    best.join(m, Seq("game_id"), "left")
+  }
+
+  private val summarySchema = StructType(Seq(
+    StructField("game_id", StringType),
+    StructField("home_team", StringType),
+    StructField("away_team", StringType),
+    StructField("outcome", StringType),
+    StructField("bookmaker", StringType),
+    StructField("price", DoubleType),
+    StructField("implied_prob", DoubleType)))
+
+  private type OddsRow =
+    (Option[String], String, String, Option[Double], Option[Double])
+
+  /** (game_id, outcome, bookmaker, price, implied_prob) rows, teams
+    * derived from the game id.
+    */
+  private def summaryInput(rows: Seq[OddsRow]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows.map {
+      case (g, o, b, p, ip) =>
+        Row(g.orNull, g.map(_ + "_h").orNull, g.map(_ + "_a").orNull,
+          o, b, p.orNull, ip.orNull)
+    }: _*), summarySchema)
+
+  /** Same schema (names, order, types, nullability) and the same rows,
+    * doubles to 1e-9 (window and grouped sums may add in another order).
+    */
+  private def assertSameSummary(in: DataFrame): Unit = {
+    val got = Arb.summary(in)
+    val want = joinedSummary(in)
+    assert(got.schema == want.schema,
+      s"schema\n${got.schema.treeString}\nvs oracle\n${want.schema.treeString}")
+    def rows(df: DataFrame) = df.collect().map(_.toSeq)
+      .sortBy(r => (String.valueOf(r.head), String.valueOf(r(3))))
+    val (g, w) = (rows(got), rows(want))
+    assert(g.length == w.length, s"${g.length} rows vs oracle ${w.length}")
+    g.zip(w).foreach { case (a, b) =>
+      val same = a.zip(b).forall {
+        case (x: Double, y: Double) => approx(x, y)
+        case (x, y) => x == y
+      }
+      assert(same, s"row $a vs oracle $b")
+    }
+  }
+
+  test("summary: window margins equal the groupBy + left-join oracle " +
+      "on 1/2/3-outcome games, ties, null prob and null game_id") {
+    def q(p: Double) = (Some(p), Some(1.0 / p))
+    val rows: Seq[OddsRow] = Seq(
+      // 2 outcomes, best total < 1: a margin
+      (Some("g2arb"), "home", "b1", q(2.2)),
+      (Some("g2arb"), "home", "b2", q(2.1)),
+      (Some("g2arb"), "away", "b1", q(1.9)),
+      (Some("g2arb"), "away", "b3", q(2.3)),
+      // 2 outcomes, total > 1: no margin
+      (Some("g2vig"), "home", "b1", q(1.8)),
+      (Some("g2vig"), "away", "b2", q(1.9)),
+      // 3 outcomes, total < 1: the P8 guard leaves it null
+      (Some("g3"), "home", "b1", q(3.5)),
+      (Some("g3"), "away", "b1", q(3.6)),
+      (Some("g3"), "draw", "b2", q(3.7)),
+      // 1 outcome
+      (Some("g1"), "home", "b1", q(1.5)),
+      // a price tie across books: b1 wins, and its implied_prob (set
+      // apart from the price on purpose) feeds the total
+      (Some("gtie"), "home", "b2", (Some(2.5), Some(0.30))),
+      (Some("gtie"), "home", "b1", (Some(2.5), Some(0.35))),
+      (Some("gtie"), "away", "b3", q(2.4)),
+      // a null implied_prob on a best row: the sum skips it
+      (Some("gnull"), "home", "b1", (Some(2.6), None)),
+      (Some("gnull"), "away", "b1", q(2.7)),
+      // every implied_prob null: total and margin null
+      (Some("gall"), "home", "b1", (Some(2.0), None)),
+      (Some("gall"), "away", "b2", (Some(2.0), None)),
+      // null game_id: best rows survive with null margin columns
+      (None, "home", "b1", q(2.2)),
+      (None, "away", "b2", q(2.2)),
+      (None, "away", "b3", q(2.0))
+    ).map { case (g, o, b, (p, ip)) => (g, o, b, p, ip) }
+    assertSameSummary(summaryInput(rows))
+    val m = Arb.summary(summaryInput(rows)).collect()
+      .map(r => (Option(r.getString(0)), r.getAs[String]("outcome")) -> r).toMap
+    val arb = m((Some("g2arb"), "home"))
+    assert(arb.getAs[Long]("n_outcomes") == 2L)
+    assert(approx(arb.getAs[Double]("arbitrage_margin"),
+      math.rint((1 - (1 / 2.2 + 1 / 2.3)) * 10000) / 100))
+    assert(approx(m((Some("gtie"), "home")).getAs[Double]("total_implied"),
+      0.35 + 1 / 2.4))
+    Seq("total_implied", "n_outcomes", "arbitrage_margin").foreach { c =>
+      assert(m((None, "home")).isNullAt(m((None, "home")).fieldIndex(c)), c)
+    }
+  }
+
+  test("property: summary equals the groupBy + left-join oracle") {
+    val gen = argmaxGen.flatMap { rows =>
+      Gen.sequence[Seq[OddsRow], OddsRow](rows.map { case (g, o, b, p) =>
+        for {
+          nullGame <- Gen.frequency(9 -> false, 1 -> true)
+          drawRow <- Gen.frequency(9 -> false, 1 -> true)
+        } yield (if (nullGame) None else Some(g),
+          if (drawRow) "draw" else o, b, p, p.map(1.0 / _))
+      })
+    }
+    forSamples(gen) { rows =>
+      // (game, outcome, book) stays unique so the argmax is total
+      assertSameSummary(summaryInput(
+        rows.groupBy(r => (r._1, r._2, r._3)).values.map(_.head).toSeq))
     }
   }
 }

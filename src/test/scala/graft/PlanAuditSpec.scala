@@ -287,6 +287,64 @@ class PlanAuditSpec extends SparkSpec {
     assert(n == 1, s"expected 1 exchange, got $n:\n${p.take(3000)}")
   }
 
+  /** The odds refresh chain over a small temp parquet history, the
+    * way `StorageStreamingSpec` builds one: two appended snapshot
+    * batches → `Snapshots.latest` → decimalize/impliedProb →
+    * proportional + power devig per (game, book).
+    */
+  private lazy val refreshView = {
+    import org.apache.spark.sql.functions.col
+    import graft.functions.OddsFunctions.{decimalize, impliedProb}
+    import graft.operators.Devig
+    import graft.sources.Snapshots
+    import spark.implicits._
+    val hist = java.nio.file.Files.createTempDirectory("graft_plan")
+      .toString + "/canonical"
+    Seq(1L, 2L).foreach { ts =>
+      Snapshots.appendCanonical((for {
+        g <- 1 to 4; b <- Seq("bk0", "bk1"); o <- Seq("home", "away")
+      } yield (ts, s"g$g", s"h$g", s"a$g", b, "h2h", o,
+        100.0 + 10 * g + ts)).toDF("snapshot_ts", "game_id", "home_team",
+        "away_team", "bookmaker", "market", "outcome", "price"), hist)
+    }
+    val view = Snapshots.latest(Snapshots.readCanonical(spark, hist),
+      Seq("game_id", "bookmaker", "market", "outcome"), "snapshot_ts")
+    val priced = view
+      .withColumn("price_decimal", decimalize(col("price")))
+      .withColumn("implied_prob", impliedProb(col("price_decimal")))
+    val group = Seq("game_id", "bookmaker")
+    Devig.power(Devig.proportional(priced, groupCols = group),
+      groupCols = group)
+  }
+
+  private def nExchanges(p: String): Int =
+    "(?<!Reused)Exchange".r.findAllIn(p).length
+
+  test("odds refresh arbitrage plans one game_id exchange and no join") {
+    // Snapshots.latest hashes the history on game_id alone; that one
+    // exchange clusters the latest, devig, best-price and per-game
+    // margin windows, so Arb.summary needs neither a shuffle nor a join
+    import org.apache.spark.sql.functions.col
+    val p = graft.operators.Arb
+      .summary(refreshView.withColumn("price", col("price_decimal")))
+      .queryExecution.executedPlan.toString
+    val n = nExchanges(p)
+    assert(n == 1, s"expected 1 exchange, got $n:\n${p.take(4000)}")
+    assert("Exchange hashpartitioning\\(game_id#\\d+, \\d+\\)".r
+      .findFirstIn(p).isDefined, p.take(4000))
+    assert(!p.contains("Join"), p.take(4000))
+  }
+
+  test("odds refresh high-EV table adds only its global-sort exchange") {
+    import graft.operators.Ev
+    val p = Ev.highEv(Ev.enrich(refreshView))
+      .queryExecution.executedPlan.toString
+    val n = nExchanges(p)
+    assert(n == 2, s"expected 2 exchanges, got $n:\n${p.take(4000)}")
+    assert(p.contains("Exchange hashpartitioning(game_id") &&
+      p.contains("Exchange rangepartitioning("), p.take(4000))
+  }
+
   test("runtime bloom-filter pruning injects on selective shuffle joins") {
     // At 100 TB the big fact⋈fact joins are shuffle joins; Spark's
     // InjectRuntimeFilter turns a selective dim-side predicate into a

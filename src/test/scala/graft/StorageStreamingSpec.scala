@@ -50,6 +50,38 @@ class StorageStreamingSpec extends SparkSpec {
     assert(Snapshots.latest(after, Seq("id"), "batch_ts").count() == 3)
   }
 
+  test("multi-key latest with tieBreak: raw log and compacted log agree") {
+    // keys coarsest first (game, book, outcome); batches 2 and 3 share
+    // ts 2 for some keys, so the `seq` tieBreak picks the survivor
+    val base = tmp()
+    val keys = Seq("game_id", "bookmaker", "outcome")
+    val rows = for {
+      (ts, seq) <- Seq((1L, 1), (2L, 2), (2L, 3))
+      g <- 1 to 3; b <- Seq("b1", "b2"); o <- Seq("home", "away")
+      // batch 2 moves the b1 keys, batch 3 the home keys: (b1, home)
+      // ties at ts 2, (b2, away) keeps its batch-1 row
+      if seq == 1 || (seq == 2 && b == "b1") || (seq == 3 && o == "home")
+    } yield (s"g$g", b, o, ts, seq, ts * 10.0 + seq + g)
+    rows.groupBy(_._5).toSeq.sortBy(_._1).foreach { case (_, batch) =>
+      Snapshots.appendCanonical(batch.toDF("game_id", "bookmaker",
+        "outcome", "ts", "seq", "price"), s"$base/canonical")
+    }
+    def view() = Snapshots.latest(
+      Snapshots.readCanonical(spark, s"$base/canonical"), keys, "ts",
+      tieBreak = Seq("seq"))
+      .select("game_id", "bookmaker", "outcome", "ts", "seq", "price")
+      .as[(String, String, String, Long, Int, Double)].collect().sorted
+    val raw = view()
+    val model = rows.groupBy(r => (r._1, r._2, r._3)).values
+      .map(_.maxBy(r => (r._4, r._5))).toSeq.sorted
+    assert(raw.toSeq == model)
+    assert(raw.map(_._5).distinct.sorted.toSeq == Seq(1, 2, 3))
+    Snapshots.compact(spark, s"$base/canonical", keys, "ts", Seq("seq"))
+    assert(Snapshots.readCanonical(spark, s"$base/canonical").count() ==
+      raw.length)
+    assert(view().toSeq == raw.toSeq)
+  }
+
   test("watermarked streaming dedup drops in-horizon duplicates") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext

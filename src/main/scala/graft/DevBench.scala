@@ -1,16 +1,11 @@
 package graft
 // dev-only micro-bench for individual queries (kept out of Bench's contract)
-import org.apache.spark.sql.SparkSession
 object DevBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.tail.toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder("local[32]", "32").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       val t0 = System.nanoTime()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
@@ -30,12 +29,7 @@ object DevCycleScale {
     val sfSmall = args.headOption.getOrElse("/root/testdata/sf0.1")
     val sfBig = args.lift(1).getOrElse("/tmp/sf1_synth")
     val rounds = args.lift(2).map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("local[32]", "32").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def legs(dir: String): (Long, Double, Double, Long, Long) = {

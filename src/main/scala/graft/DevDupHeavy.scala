@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
@@ -30,14 +30,7 @@ object DevDupHeavy {
     val groupDocs = args.lift(1).map(_.toInt).getOrElse(500)
     val copyFactors = if (args.length > 2)
       args.drop(2).map(_.toInt).toSeq else Seq(10, 40, 160)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("local[32]", "32").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val base = spark.read.parquet(s"$sfDir/documents.parquet")

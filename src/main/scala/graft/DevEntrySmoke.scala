@@ -1,11 +1,8 @@
 package graft
 // dev-only: the driver's entry smoke (SparkEntry.entry rows > 0)
-import org.apache.spark.sql.SparkSession
 object DevEntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder("local[8]", "8").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     println("ENTRY_ROWS=" + SparkEntry.entry(spark).count())
     spark.stop()

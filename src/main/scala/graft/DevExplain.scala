@@ -1,13 +1,9 @@
 package graft
 // dev-only plan audit: prints key physical-plan properties per query
-import org.apache.spark.sql.SparkSession
 object DevExplain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder("local[32]", "32")
+      .config("spark.sql.adaptive.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.01"
     val names = if (args.nonEmpty) args.toSeq

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.sim.Similarity
 
 /** Dev-only measurement for the q89 scale claim (r10 verdict "next"
@@ -40,12 +38,7 @@ object DevNlistScale {
     val sfSmall = args.headOption.getOrElse("/root/testdata/sf0.1")
     val sfBig = args.lift(1).getOrElse("/tmp/sf1_synth")
     val rounds = args.lift(2).map(_.toInt).getOrElse(5)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("local[32]", "32").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def best(dir: String, nlist: Int): (Double, Long, Long) = {

@@ -4,26 +4,19 @@ package graft
 // before/after plan artifacts for optimization rounds. Not part of
 // the driver contract.
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 object DevPlanDump {
   def main(args: Array[String]): Unit = {
     val dir = args(0)      // sf data dir
     val outDir = args(1)   // e.g. plans/r13
     val suffix = args(2)   // "before" | "after"
     val names = args(3).split(',').toSeq.filter(_.nonEmpty)
-    val builder = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
+    val builder = GraftSession.builder("local[32]", "32")
       .config("spark.sql.adaptive.enabled", "false") // show codegen spans
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
     // rehearsal hook (r14): extra session confs, e.g. forcing the
     // size gates so at-scale plan shapes can be dumped at gate SF
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
-      .flatMap(_.split(';')).map(_.trim).filter(_.contains('='))
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); builder.config(k, v)
-      }
+    GraftSession.extraConf(sys.env).foreach { case (k, v) =>
+      builder.config(k, v)
+    }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev-only sf1 rehearsal data builder (r2 verdict item 5): the driver
@@ -35,12 +35,8 @@ object DevScaleRehearsal {
     val srcDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outDir = args.lift(1).getOrElse("/tmp/sf1_synth")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = GraftSession.builder("local[32]", "32")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val OFF = 1000000L // > every key range; divisible by 40, 100, 32

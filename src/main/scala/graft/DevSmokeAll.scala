@@ -4,15 +4,10 @@ package graft
 // schema-sensitive change (the driver regenerates testdata between
 // rounds and has changed column encodings before: r5's events.ts
 // flipped TIMESTAMP(NANOS) → TIMESTAMP(MICROS)).
-import org.apache.spark.sql.SparkSession
 object DevSmokeAll {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder("local[8]", "8").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val names = SparkEntry.queries.keys.toSeq.sorted
     var bad = 0

@@ -10,8 +10,8 @@ import org.apache.spark.sql.SparkSession
   * from here, so any perf-relevant setting is exercised by the oracle
   * gate before the driver ever benches it.
   *
-  * Every setting is size-adaptive or semantic, none is a local[32]
-  * tune:
+  * Every setting is size-adaptive, sized to a measured working set or
+  * semantic; none is a local[32] tune:
   *  - AQE + 1m advisory/256k min partition sizing: post-shuffle
   *    partitions follow BYTES (gate-SF shuffles are ~KB-MB and
   *    coalesce near core count; production shuffles keep hundreds of
@@ -24,50 +24,81 @@ import org.apache.spark.sql.SparkSession
   *  - ANSI off: the engine's pandas-coerce semantics (Spark 4 flips
   *    the default).
   *  - UTC: the oracle compares timestamps in one zone.
+  *  - codegen cache of [[CodegenCacheMaxEntries]] classes: sized to the
+  *    engine's working set of generated classes, not to the core
+  *    count. Spark's default LRU holds 100 (a static conf, fixed by
+  *    the first session in a JVM, hence set here). Measured on a
+  *    4-core host: one catalog pass compiles 2,695 distinct classes
+  *    (sf0.001; an sf0.01 round after it adds 166), a
+  *    `dedup_maintenance` benchmark run 343 and an `odds_refresh` run
+  *    69. At 100 entries the LRU evicted them before reuse: every
+  *    maintenance op recompiled 47-88 classes (~20 ms each under C1)
+  *    and a second sf0.01 catalog round recompiled 4,101. A retained
+  *    class costs ~30 KB of heap.
   */
 object GraftSession {
 
-  /** Common builder: `master` e.g. "local[32]", `shufflePartitions`
-    * normally = the core count (AQE re-sizes by bytes from there).
+  /** Generated classes Spark's codegen cache keeps (see class doc). */
+  val CodegenCacheMaxEntries = 4096
+
+  /** Every conf `builder` sets, in the order it sets them.
+    * `shufflePartitions` is normally the core count (AQE re-sizes by
+    * bytes from there).
     */
+  def settings(shufflePartitions: String): Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" -> shufflePartitions,
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.adaptive.enabled" -> "true",
+    // default 64MB advisory size would coalesce gate-SF ~30MB
+    // shuffles into ONE post-shuffle partition, serializing every
+    // window/agg — keep sizing byte-driven but fine-grained
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1m",
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "256k",
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
+    "spark.sql.ansi.enabled" -> "false",
+    "spark.sql.codegen.cache.maxEntries" -> CodegenCacheMaxEntries.toString,
+    "spark.ui.enabled" -> "false")
+
+  /** Common builder: `master` e.g. "local[32]". */
   def builder(master: String, shufflePartitions: String)
       : SparkSession.Builder =
-    SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // default 64MB advisory size would coalesce gate-SF ~30MB
-      // shuffles into ONE post-shuffle partition, serializing every
-      // window/agg — keep sizing byte-driven but fine-grained
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        "256k")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
+    configured(master, settings(shufflePartitions))
+
+  /** $SPARK_GRAFT_EXTRA_CONF ("k=v;k=v", dev/rehearsal hook) as
+    * (key, value) pairs — used by the 10x scale rehearsal to force the
+    * size-adaptive branch thresholds (graft.cc.localEdgeMax /
+    * graft.sa.localTokenMax) so the DISTRIBUTED sides of those
+    * branches are exercised and timed above gate SF. Unset by
+    * default, so contract runs are untouched.
+    */
+  private[graft] def extraConf(env: Map[String, String])
+      : Seq[(String, String)] =
+    env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
+      .flatMap(_.split(';')).map(_.trim).filter(_.contains('='))
+      .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }
+
+  /** `fromEnv`'s master and confs, in the order it applies them: the
+    * [[settings]], then the extra confs, so those override any setting.
+    */
+  private[graft] def envSettings(env: Map[String, String])
+      : (String, Seq[(String, String)]) = {
+    val cpus = env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    (s"local[$cpus]", settings(cpus) ++ extraConf(env))
+  }
 
   /** The driver-contract builder: core count from $SPARK_GRAFT_CPUS
     * (master local[$cpus] — the driver also benches at a lower core
-    * count to measure scaling, so the master must follow the env).
-    *
-    * $SPARK_GRAFT_EXTRA_CONF ("k=v;k=v", dev/rehearsal hook) applies
-    * additional SESSION confs — used by the 10x scale rehearsal to
-    * force the size-adaptive branch thresholds
-    * (graft.cc.localEdgeMax / graft.sa.localTokenMax) so the
-    * DISTRIBUTED sides of those branches are exercised and timed
-    * above gate SF. Unset in the driver's environment, so contract
-    * runs are untouched.
+    * count to measure scaling, so the master must follow the env),
+    * plus [[extraConf]].
     */
   def fromEnv(): SparkSession.Builder = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val b = builder(s"local[$cpus]", cpus)
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
-      .flatMap(_.split(';')).map(_.trim).filter(_.contains('='))
-      .foldLeft(b) { (acc, kv) =>
-        val Array(k, v) = kv.split("=", 2)
-        acc.config(k, v)
-      }
+    val (master, confs) = envSettings(sys.env)
+    configured(master, confs)
   }
+
+  private def configured(master: String, confs: Seq[(String, String)])
+      : SparkSession.Builder =
+    confs.foldLeft(SparkSession.builder().master(master)) {
+      case (b, (k, v)) => b.config(k, v)
+    }
 }

@@ -12,6 +12,10 @@ trait SparkSpec extends AnyFunSuite {
     .config("spark.sql.ansi.enabled", "false")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")
+    // the engine's codegen cache size: the suite JVM compiles hundreds
+    // of distinct plans, which Spark's 100-entry default keeps evicting
+    .config("spark.sql.codegen.cache.maxEntries",
+      GraftSession.CodegenCacheMaxEntries.toString)
     .getOrCreate()
 
   def fixtureOdds: DataFrame =

@@ -81,14 +81,16 @@ object DevDupHeavy {
       s" x (copies+1) members")
     for (c <- copyFactors) {
       val d = dupHeavy(c)
-      Dedup.clearSigCache(); Dedup.clearPairCache()
+      Dedup.clearSigCache()
+      graft.model.FitCache.clear(graft.model.FitCache.NearDupPairs)
       val rows = d.count()
       println(s"--- copies=$c (corpus ${rows} rows, " +
         s"${groupDocs.toLong * c} replicas) ---")
       time(s"collapsed_edges_x$c") {
         Dedup.simhashEdges(d, maxHamming = 12).count()
       }
-      Dedup.clearSigCache(); Dedup.clearPairCache()
+      Dedup.clearSigCache()
+      graft.model.FitCache.clear(graft.model.FitCache.NearDupPairs)
       time(s"collapsed_cc_x$c") {
         Dedup.simhashClusters(d, maxHamming = 12).count()
       }

@@ -77,7 +77,7 @@ object QueriesScale {
     * one per query construction.
     */
   private def phashGroups(v: DataFrame): Int = {
-    var g = math.max(53L, graft.model.CorpusStats.cachedCount(v) / 100L)
+    var g = math.max(53L, graft.model.FitCache.count(v) / 100L)
     if (g % 2 == 0) g += 1
     if (g % 5 == 0) g += 2
     g.toInt
@@ -3960,7 +3960,7 @@ object QueriesScale {
       val d0 = docs(spark, dir)
       // fit-once memoized count (r7 verdict item 4) — the shard-count
       // derivation no longer launches a corpus scan per execution
-      val nSh = math.max(8L, graft.model.CorpusStats.cachedCount(d0) / 1000L)
+      val nSh = math.max(8L, graft.model.FitCache.count(d0) / 1000L)
       val d = d0
         .select(col("doc_id"),
           pmod(conv(substring(md5(concat(lit("sh:"),

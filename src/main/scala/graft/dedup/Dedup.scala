@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.model.{Checkpoints, FitCache}
 import graft.text.TextAnalysis
 
 /** Deduplication operators for large-scale document pipelines
@@ -197,56 +198,30 @@ object Dedup {
     * quadratic-in-cluster band work to linear (plus the inherently
     * output-sized pair list).
     */
-  private val sigCache = new graft.model.BoundedCache[DataFrame](
-    graft.model.NgramLm.MaxMemoEntries,
-    graft.model.Checkpoints.release)
-
-  /** Count of ACTUAL signature-table builds (cache hits leave it
-    * untouched) — the FitCacheSpec-style counter.
-    */
-  private[graft] val sigBuildCount =
-    new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Drop the served signature tables — the [[graft.model.CorpusStats]]
-    * staleness hatch for harnesses that rewrite input files in place
-    * within one JVM.
-    */
-  def clearSigCache(): Unit = sigCache.clear()
+  /** Drop the served MinHash and SimHash signature tables. */
+  def clearSigCache(): Unit =
+    FitCache.clear(FitCache.MinhashSigs, FitCache.SimhashSigs)
 
   /** The per-corpus MinHash signature table (id, sig, sig_fp) as
     * FIT-ONCE SERVED STATE (the r10 score-frame discipline applied to
-    * LSH): it is a pure function of (corpus plan, k, shingleSize) and
+    * LSH): it is a pure function of (corpus, k, shingleSize) and
     * the single expensive stage of every MinHash query — k·shingles
     * md5 evaluations per doc — so it is built once per corpus,
     * materialized (executor storage, truncated lineage, sig_fp
     * partitioning preserved), and served to q25/q70/q114/q163 and
-    * every later execution. OPT-IN because the memo keys on the
-    * canonicalized PLAN, not file contents: callers whose input is
-    * rewritten between executions in one JVM — the streaming gate's
-    * growing canonical table — must stay on the inline path.
+    * every later execution ([[FitCache]]). OPT-IN because a served
+    * table pins executor storage while its entry lives: an input that
+    * changes between executions — the streaming gate's growing
+    * canonical table — would pay a full materialization per version
+    * and must stay on the inline path.
     */
-  private def sigKey(docs: DataFrame, idCol: String, textCol: String,
-                     k: Int, shingleSize: Int): String =
-    "minhashsigs:" +
-      s"${graft.model.PlanKey.of(docs)}:$idCol:$textCol:$k:$shingleSize"
-
   private def cachedSigs(docs: DataFrame, idCol: String,
                          textCol: String, k: Int,
-                         shingleSize: Int): DataFrame = {
-    val key = sigKey(docs, idCol, textCol, k, shingleSize)
-    val hit = sigCache.get(key)
-    if (hit != null && !hit.sparkSession.sparkContext.isStopped) hit
-    else {
-      sigCache.forEach { (kk, v) =>
-        if (v.sparkSession.sparkContext.isStopped) sigCache.remove(kk)
-      }
-      sigBuildCount.incrementAndGet()
-      val built = graft.model.Checkpoints.materialize(
-        sigFrame(docs, idCol, textCol, k, shingleSize))
-      sigCache.put(key, built)
-      built
+                         shingleSize: Int): DataFrame =
+    FitCache.getOrBuild(FitCache.MinhashSigs, docs, idCol, textCol, k,
+        shingleSize) {
+      Checkpoints.materialize(sigFrame(docs, idCol, textCol, k, shingleSize))
     }
-  }
 
   /** The build-or-serve signature table, exposed for persistence
     * ([[graft.model.Artifacts.saveSigs]]): production builds the
@@ -268,7 +243,8 @@ object Dedup {
   def installSigs(docs: DataFrame, sigs: DataFrame,
                   idCol: String = "doc_id", textCol: String = "text",
                   k: Int = 16, shingleSize: Int = 3): Unit =
-    sigCache.put(sigKey(docs, idCol, textCol, k, shingleSize), sigs)
+    FitCache.install(FitCache.MinhashSigs, docs, sigs, idCol, textCol, k,
+      shingleSize)
 
   private def sigFrame(docs: DataFrame, idCol: String, textCol: String,
                        k: Int, shingleSize: Int): DataFrame =
@@ -603,34 +579,16 @@ object Dedup {
     * [[signatureTable]]'s twin for the SimHash detector (r13: the
     * batch-vs-served probe [[simhashBatchEdges]] needs a servable
     * history side, exactly like [[incrementalNearDup]] rides the
-    * MinHash table). Same opt-in plan-key caveat as every served
-    * table; persist/restore with
+    * MinHash table). Opt-in for the same reason as the MinHash table;
+    * persist/restore with
     * [[graft.model.Artifacts.saveSimhashSigs]]/`loadSimhashSigs` +
     * [[installSimhashSigs]].
     */
   def simhashTable(docs: DataFrame, idCol: String = "doc_id",
-                   textCol: String = "text"): DataFrame = {
-    val key = "simhashsigs:" +
-      s"${graft.model.PlanKey.of(docs)}:$idCol:$textCol"
-    val hit = sigCache.get(key)
-    if (hit != null && !hit.sparkSession.sparkContext.isStopped) hit
-    else {
-      sigCache.forEach { (kk, v) =>
-        if (v.sparkSession.sparkContext.isStopped) sigCache.remove(kk)
-      }
-      simhashBuildCount.incrementAndGet()
-      val built = graft.model.Checkpoints.materialize(
-        simhashSigsOf(docs, idCol, textCol))
-      sigCache.put(key, built)
-      built
+                   textCol: String = "text"): DataFrame =
+    FitCache.getOrBuild(FitCache.SimhashSigs, docs, idCol, textCol) {
+      Checkpoints.materialize(simhashSigsOf(docs, idCol, textCol))
     }
-  }
-
-  /** Count of ACTUAL SimHash table builds (cache hits leave it
-    * untouched) — the FitCacheSpec counter discipline.
-    */
-  private[graft] val simhashBuildCount =
-    new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Install a LOADED SimHash signature table as the served entry for
     * (corpus plan, params) — [[installSigs]]'s twin.
@@ -638,8 +596,7 @@ object Dedup {
   def installSimhashSigs(docs: DataFrame, sigs: DataFrame,
                          idCol: String = "doc_id",
                          textCol: String = "text"): Unit =
-    sigCache.put("simhashsigs:" +
-      s"${graft.model.PlanKey.of(docs)}:$idCol:$textCol", sigs)
+    FitCache.install(FitCache.SimhashSigs, docs, sigs, idCol, textCol)
 
   /** The plain per-doc SimHash signature frame (id, sh) — the
     * UNCACHED building block ([[simhashTable]] is its fit-once
@@ -1505,6 +1462,19 @@ object Dedup {
         "doc_id", maxHamming),
       idCol, maxIter)
 
+  /** Install a LOADED pair table
+    * ([[graft.model.Artifacts.loadPairs]]) as the served near-dup
+    * index for (corpus plan, params) — [[installSigs]]'s twin one
+    * stage later.
+    */
+  def installPairs(docs: DataFrame, pairs: DataFrame,
+                   idCol: String = "doc_id", textCol: String = "text",
+                   k: Int = 16, bands: Int = 4, shingleSize: Int = 3,
+                   estThreshold: Double = 0.35,
+                   exactThreshold: Double = 0.7): Unit =
+    FitCache.install(FitCache.NearDupPairs, docs, pairs, idCol, textCol, k,
+      bands, shingleSize, estThreshold, exactThreshold)
+
   /** Verified near-dup pairs: LSH candidates re-scored with exact
     * n-gram Jaccard (the LSH estimate prunes, the exact score decides).
     */
@@ -1516,39 +1486,6 @@ object Dedup {
     * sliver to that set's neighborhood; identity (the default) keeps
     * the original all-candidates behavior.
     */
-  private val pairCache = new graft.model.BoundedCache[DataFrame](
-    graft.model.NgramLm.MaxMemoEntries,
-    graft.model.Checkpoints.release)
-
-  /** Count of ACTUAL pair-table builds ([[nearDuplicates]] with
-    * `servePairs` misses) — the FitCacheSpec counter discipline.
-    */
-  private[graft] val pairBuildCount =
-    new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Drop the served pair tables ([[clearSigCache]]'s twin). */
-  def clearPairCache(): Unit = pairCache.clear()
-
-  private def pairKey(docs: DataFrame, idCol: String, textCol: String,
-                      k: Int, bands: Int, shingleSize: Int,
-                      estThreshold: Double,
-                      exactThreshold: Double): String =
-    "neardup:" + sigKey(docs, idCol, textCol, k, shingleSize) +
-      s":$bands:$estThreshold:$exactThreshold"
-
-  /** Install a LOADED pair table
-    * ([[graft.model.Artifacts.loadPairs]]) as the served near-dup
-    * index for (corpus plan, params) — [[installSigs]]'s twin one
-    * stage later.
-    */
-  def installPairs(docs: DataFrame, pairs: DataFrame,
-                   idCol: String = "doc_id", textCol: String = "text",
-                   k: Int = 16, bands: Int = 4, shingleSize: Int = 3,
-                   estThreshold: Double = 0.35,
-                   exactThreshold: Double = 0.7): Unit =
-    pairCache.put(pairKey(docs, idCol, textCol, k, bands, shingleSize,
-      estThreshold, exactThreshold), pairs)
-
   def nearDuplicates(docs: DataFrame, idCol: String = "doc_id",
                      textCol: String = "text", k: Int = 16,
                      bands: Int = 4, shingleSize: Int = 3,
@@ -1571,25 +1508,12 @@ object Dedup {
     // corpus. Filters that are NOT pure pair-id predicates must stay
     // on the inline path.
     if (servePairs) {
-      val key = pairKey(docs, idCol, textCol, k, bands, shingleSize,
-        estThreshold, exactThreshold)
-      val hit = pairCache.get(key)
-      val full =
-        if (hit != null && !hit.sparkSession.sparkContext.isStopped)
-          hit
-        else {
-          pairCache.forEach { (kk, v) =>
-            if (v.sparkSession.sparkContext.isStopped)
-              pairCache.remove(kk)
-          }
-          pairBuildCount.incrementAndGet()
-          val built = graft.model.Checkpoints.materialize(
-            nearDuplicates(docs, idCol, textCol, k, bands,
-              shingleSize, estThreshold, exactThreshold,
-              serveSigs = true))
-          pairCache.put(key, built)
-          built
-        }
+      val full = FitCache.getOrBuild(FitCache.NearDupPairs, docs, idCol,
+          textCol, k, bands, shingleSize, estThreshold, exactThreshold) {
+        Checkpoints.materialize(nearDuplicates(docs, idCol, textCol, k,
+          bands, shingleSize, estThreshold, exactThreshold,
+          serveSigs = true))
+      }
       return pairFilter(full)
     }
     val cands = pairFilter(

@@ -118,17 +118,9 @@ object SuffixRepeats {
     * discipline as Similarity.trainedCentroids: first execution pays
     * the prefix-octupling rounds; later executions read the eagerly
     * checkpointed span table (doc-count-sized — one row per document
-    * with repeats) with zero ranking jobs. A stopped-session entry is
-    * detected and rebuilt.
-    */
-  private val indexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  /** Count of ACTUAL SA builds (cache hits leave it untouched). */
-  private[graft] val buildRunCount =
-    new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** The cached SA index primitive: the merged SPAN LIST — one row
+    * with repeats) with zero ranking jobs ([[graft.model.FitCache]]).
+    *
+    * The cached SA index primitive: the merged SPAN LIST — one row
     * per maximal repeated span of ≥ `minLen` tokens,
     * (doc_id, s, e, span_max_ell) with [s, e) 1-based token
     * positions and span_max_ell the longest single repeat starting
@@ -138,21 +130,9 @@ object SuffixRepeats {
     * "deduplicate the training set" transform of Lee et al.).
     */
   def repeatedSpanList(docsTok: DataFrame, minLen: Int,
-                       parts: Int = 8): DataFrame = {
-    val key = "sa:" + graft.model.PlanKey.of(docsTok) + s":$minLen:$parts"
-    val hit = indexCache.get(key)
-    if (hit != null && !hit.sparkSession.sparkContext.isStopped) hit
-    else {
-      // evict dead-session entries on insert (r7 ADVICE item 2) so a
-      // long-lived JVM cycling SparkSessions doesn't pin stale frames
-      indexCache.forEach { (k, v) =>
-        if (v.sparkSession.sparkContext.isStopped) indexCache.remove(k)
-      }
-      val built = spanListUncached(docsTok, minLen, parts)
-      indexCache.put(key, built)
-      built
-    }
-  }
+                       parts: Int = 8): DataFrame =
+    graft.model.FitCache.getOrBuild(graft.model.FitCache.SpanIndex,
+      docsTok, minLen, parts)(spanListUncached(docsTok, minLen, parts))
 
   /** Uncached span-list build (the [[repeatedSpanList]] body without
     * the memo) — the incremental merge ([[mergeSpanList]]) ranks
@@ -580,7 +560,6 @@ object SuffixRepeats {
                             caches: ListBuffer[DataFrame])
       : DataFrame = {
     require(minLen >= 1, s"minLen=$minLen must be >= 1")
-    buildRunCount.incrementAndGet()
 
     // persist + aggregate is ONE action (r14 — the duplicateClusters
     // e0 discipline): the old materialize-then-aggregate pair paid a

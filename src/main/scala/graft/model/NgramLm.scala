@@ -18,11 +18,11 @@ import org.apache.spark.sql.functions._
   * model tables are built ONCE per (corpus plan, params) key —
   * vocab-bounded aggregates, eagerly materialized via
   * [[Checkpoints.materialize]] so they live in executor storage with
-  * truncated lineage — and memoized in a process-wide map keyed by
-  * [[PlanKey]]. q136 and q151 construct plan-identical token frames,
-  * so they SHARE one [[BigramLm]] entry: whichever runs first pays
-  * the fit, the other scores against warm tables with zero model
-  * jobs (FitCacheSpec asserts it via [[fitRunCount]]).
+  * truncated lineage — and served from [[FitCache]]. q136 and q151
+  * construct plan-identical token frames, so they SHARE one
+  * [[BigramLm]] entry: whichever runs first pays the fit, the other
+  * scores against warm tables with zero model jobs (NgramLmSpec
+  * asserts it via [[fitRunCount]]).
   *
   * The tables are DataFrames, not driver collections, because an
   * n-gram model is vocab-bounded but NOT driver-sized at 100 TB
@@ -46,47 +46,14 @@ object NgramLm {
   final case class BigramLm(c12: DataFrame, ctx: DataFrame,
                             cont: DataFrame, nall: Long, v: Long)
 
-  /** LRU bound for the fit-once memos (r10 verdict "what's wrong"
-    * item 2): a long-lived driver iterating corpus versions must not
-    * accumulate dead entries — and the executor storage behind them —
-    * forever. Eviction releases the evicted entry's materialized
-    * frames (a guarded no-op for driver-local relations); served
-    * frames are valid while their entry lives, and the `clear()`
-    * hatch remains the staleness escape.
-    */
-  private[graft] val MaxMemoEntries = 64
-
-  private def releaseBigram(m: BigramLm): Unit =
-    Seq(m.c12, m.ctx, m.cont).foreach(Checkpoints.release)
-
-  private val bigramCache =
-    new BoundedCache[BigramLm](MaxMemoEntries, releaseBigram)
-  private val dsirCache =
-    new BoundedCache[DataFrame](MaxMemoEntries, Checkpoints.release)
-  private val scoreCache =
-    new BoundedCache[DataFrame](MaxMemoEntries, Checkpoints.release)
-
   /** Count of ACTUAL model fits (cache hits leave it untouched) —
     * FitCacheSpec's zero-model-jobs-on-re-execution counter.
     */
   private[graft] val fitRunCount = new AtomicLong(0L)
 
-  /** Count of ACTUAL score-frame builds ([[cachedScoreFrame]] misses)
-    * — the same counter discipline one level up (r9 verdict item 1).
-    */
-  private[graft] val scoreRunCount = new AtomicLong(0L)
-
-  /** Drop every fit-once LM cache (models AND score frames). The
-    * [[CorpusStats.clear]] escape hatch extended to the LM family:
-    * the caches key on the canonicalized PLAN, not file contents, so
-    * a harness that rewrites an input file in place within one JVM
-    * must call this between corpora or q136/q137/q151/q156 would
-    * silently serve models fitted on the old bytes.
-    */
-  def clear(): Unit = {
-    bigramCache.clear(); dsirCache.clear(); scoreCache.clear()
-    trigramCache.clear()
-  }
+  /** Drop every fit-once LM entry: models AND score frames. */
+  def clear(): Unit = FitCache.clear(FitCache.Bigram, FitCache.Trigram,
+    FitCache.Dsir, FitCache.LmScore)
 
   /** Fit-once discipline ONE LEVEL UP (r9 verdict item 1): the
     * per-doc score frame — (doc_id, n_bigrams, ppl) for add-α,
@@ -104,18 +71,9 @@ object NgramLm {
     * Integer/4dp-rounded columns make re-build vs serve bit-equal.
     */
   def cachedScoreFrame(base: DataFrame, tag: String)
-                      (build: => DataFrame): DataFrame = {
-    val key = s"score:$tag:${PlanKey.of(base)}"
-    val hit = scoreCache.get(key)
-    if (hit != null && live(hit)) hit
-    else {
-      evictDead[DataFrame](scoreCache, identity)
-      scoreRunCount.incrementAndGet()
-      val f = Checkpoints.materialize(build)
-      scoreCache.put(key, f)
-      f
-    }
-  }
+                      (build: => DataFrame): DataFrame =
+    FitCache.getOrBuild(FitCache.LmScore, base, tag)(
+      Checkpoints.materialize(build))
 
   /** Install a LOADED score frame ([[Artifacts.loadScoreFrame]]) as
     * the served entry for (tag, corpus plan): a fresh session that
@@ -126,16 +84,7 @@ object NgramLm {
     */
   def installScoreFrame(base: DataFrame, tag: String,
                         frame: DataFrame): Unit =
-    scoreCache.put(s"score:$tag:${PlanKey.of(base)}", frame)
-
-  private def live(df: DataFrame): Boolean =
-    !df.sparkSession.sparkContext.isStopped
-
-  private def evictDead[V](cache: BoundedCache[V],
-                           frame: V => DataFrame): Unit =
-    cache.forEach { (k, v) =>
-      if (!live(frame(v))) cache.remove(k)
-    }
+    FitCache.install(FitCache.LmScore, base, frame, tag)
 
   /** Small fitted tables become driver-local relations (the IVF
     * "centroid literal" discipline applied to tables): a broadcast
@@ -165,12 +114,8 @@ object NgramLm {
     * building the tables inline.
     */
   def cachedBigram(base: DataFrame,
-                   trustedLang: String = "en"): BigramLm = {
-    val key = s"bigram:${PlanKey.of(base)}:$trustedLang"
-    val hit = bigramCache.get(key)
-    if (hit != null && live(hit.c12)) hit
-    else {
-      evictDead[BigramLm](bigramCache, _.c12)
+                   trustedLang: String = "en"): BigramLm =
+    FitCache.getOrBuild(FitCache.Bigram, base, trustedLang) {
       fitRunCount.incrementAndGet()
       val bg = base.filter(col("lang") === trustedLang)
         .select(explode(when(size(col("tk")) >= 2,
@@ -187,10 +132,8 @@ object NgramLm {
         localized(ctx, nall, mx), localized(cont, nall, mx), nall, v)
       if (nall <= mx) // the checkpoints are superseded by the
         Seq(c12, ctx, cont).foreach(Checkpoints.release) // local copies
-      bigramCache.put(key, m)
       m
     }
-  }
 
   /** Broadcast-vs-shuffle cutover for the scoring joins, in PAIRS
     * (c12 rows ≈ 50 B each → the default ≈ 200 MB broadcast, inside
@@ -271,24 +214,14 @@ object NgramLm {
   final case class TrigramLm(c123: DataFrame, ctx12: DataFrame,
                              n3: Long, bigram: BigramLm)
 
-  // the embedded bigram member is bigramCache's SHARED entry —
-  // only that cache's own eviction may release it
-  private val trigramCache =
-    new BoundedCache[TrigramLm](MaxMemoEntries, (m: TrigramLm) =>
-      Seq(m.c123, m.ctx12).foreach(Checkpoints.release))
-
   /** The query-facing trained trigram LM: one pass over the trusted
     * slice for the order-3 counts; the bigram order comes from
     * [[cachedBigram]]'s shared entry (zero extra jobs when any
     * family member has run).
     */
   def cachedTrigram(base: DataFrame,
-                    trustedLang: String = "en"): TrigramLm = {
-    val key = s"trigram:${PlanKey.of(base)}:$trustedLang"
-    val hit = trigramCache.get(key)
-    if (hit != null && live(hit.c123)) hit
-    else {
-      evictDead[TrigramLm](trigramCache, _.c123)
+                    trustedLang: String = "en"): TrigramLm =
+    FitCache.getOrBuild(FitCache.Trigram, base, trustedLang) {
       val bg = cachedBigram(base, trustedLang)
       fitRunCount.incrementAndGet()
       val tg = base.filter(col("lang") === trustedLang)
@@ -308,10 +241,8 @@ object NgramLm {
         localized(ctx12, n3, mx), n3, bg)
       if (n3 <= mx)
         Seq(c123, ctx12).foreach(Checkpoints.release)
-      trigramCache.put(key, m)
       m
     }
-  }
 
   /** Score a corpus trigram stream (doc_id, w1, w2, w3) against a
     * trained [[TrigramLm]]: joins the order-3 tables on
@@ -558,12 +489,8 @@ object NgramLm {
     * raw count's aggregate).
     */
   def cachedDsir(base: DataFrame, bBuckets: Int,
-                 trustedLang: String = "en"): DataFrame = {
-    val key = s"dsir:${PlanKey.of(base)}:$bBuckets:$trustedLang"
-    val hit = dsirCache.get(key)
-    if (hit != null && live(hit)) hit
-    else {
-      evictDead[DataFrame](dsirCache, identity)
+                 trustedLang: String = "en"): DataFrame =
+    FitCache.getOrBuild(FitCache.Dsir, base, bBuckets, trustedLang) {
       fitRunCount.incrementAndGet()
       val bg = base.select(col("lang"),
         explode(when(size(col("tk")) >= 2,
@@ -589,10 +516,7 @@ object NgramLm {
       // ≤ bBuckets rows by construction → always a driver-local
       // relation: the per-execution broadcast builds from driver
       // rows, no collect job
-      val lr = fitted.sparkSession.createDataFrame(
+      fitted.sparkSession.createDataFrame(
         java.util.Arrays.asList(fitted.collect(): _*), fitted.schema)
-      dsirCache.put(key, lr)
-      lr
     }
-  }
 }

@@ -1,11 +1,13 @@
 package graft.model
 
-import org.apache.spark.sql.DataFrame
+import java.nio.charset.StandardCharsets.UTF_8
 
-/** Cache-key derivation for every fit-once artifact cache
-  * (Similarity.trainedCentroids, Pq.trainedCodebooks,
-  * UnigramLm.cachedInventory, MultiPattern.cachedPatterns,
-  * SuffixRepeats.repeatedSpans, QueriesScale's corpus-count memo).
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
+
+/** The input half of a [[FitCache]] key: what a frame computes, and
+  * over which bytes.
   *
   * r7 ADVICE item 1: keying on the 32-bit canonicalized-plan
   * `semanticHash` alone gives a ~2⁻³² silent-collision budget — far
@@ -17,13 +19,26 @@ import org.apache.spark.sql.DataFrame
   * Canonicalization normalizes expression ids and aliases, so two
   * plan-identical frames still share a key; two different corpora
   * collide only if md5(planString) AND semanticHash both collide.
+  *
+  * The same digest folds in every scanned file's (path, length,
+  * mtime), so a file rewritten in place is a different key. The
+  * listing is the one the relation's FileIndex took when the frame was
+  * read and keeps in memory: reading it makes no filesystem call.
   */
 object PlanKey {
   def of(df: DataFrame): String = {
-    val p = df.queryExecution.analyzed.canonicalized
+    val plan = df.queryExecution.analyzed
+    val p = plan.canonicalized
     val md = java.security.MessageDigest.getInstance("MD5")
-    val dig = md.digest(p.toString.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    s"$dig:${p.semanticHash()}"
+    md.update(p.toString.getBytes(UTF_8))
+    files(plan).foreach(f => md.update(f.getBytes(UTF_8)))
+    s"${java.util.HexFormat.of.formatHex(md.digest)}:${p.semanticHash()}"
   }
+
+  private def files(plan: LogicalPlan): Seq[String] =
+    plan.collectWithSubqueries { case l: LogicalRelation => l.relation }
+      .collect { case r: HadoopFsRelation => r.location }
+      .collect { case i: PartitioningAwareFileIndex => i.allFiles() }
+      .flatMap(_.map(s =>
+        s"|${s.getPath}:${s.getLen}:${s.getModificationTime}").sorted)
 }

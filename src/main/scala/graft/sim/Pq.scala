@@ -56,25 +56,20 @@ object Pq {
     * (subspace, iteration) — at scale this is its own job and the
     * codebooks are persisted; the online encode never re-fits.
     */
-  /** FIT-ONCE cache for trained codebooks (r6 verdict item 1 — same
-    * rationale as [[Similarity.trainedCentroids]]): codebooks are an
-    * offline artifact; memoize per (corpus plan, params) so repeat
-    * executions encode/search with zero training jobs. Values are
-    * m×k×dsub doubles — codebook-sized, never corpus-sized.
+  /** Trained codebooks served from [[graft.model.FitCache]] per
+    * (corpus, params) (r6 verdict item 1 — same rationale as
+    * [[Similarity.trainedCentroids]]): repeat executions encode/search
+    * with zero training jobs. Values are m×k×dsub doubles —
+    * codebook-sized, never corpus-sized.
     */
-  private val fitOnceCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[Seq[Seq[Double]]]]()
-
   def trainedCodebooks(corpus: DataFrame, m: Int, k: Int,
                        iters: Int = 3, tol: Option[Double] = None,
                        idCol: String = "vec_id",
                        vecCol: String = "embedding")
-      : Seq[Seq[Seq[Double]]] = {
-    val key = s"pq:${Similarity.corpusPlanKey(corpus)}:$m:$k:$iters:" +
-      s"$tol:$idCol:$vecCol"
-    fitOnceCache.computeIfAbsent(key,
-      _ => fitCodebooks(corpus, m, k, iters, tol, idCol, vecCol))
-  }
+      : Seq[Seq[Seq[Double]]] =
+    graft.model.FitCache.getOrBuild(graft.model.FitCache.Codebooks, corpus,
+      m, k, iters, tol, idCol, vecCol)(
+      fitCodebooks(corpus, m, k, iters, tol, idCol, vecCol))
 
   def fitCodebooks(corpus: DataFrame, m: Int, k: Int,
                    iters: Int = 3, tol: Option[Double] = None,

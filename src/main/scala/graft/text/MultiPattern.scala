@@ -62,19 +62,14 @@ object MultiPattern {
       .collect().map(_.getString(0)).toSeq
   }
 
-  private val fitOnceCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
-
   private[graft] val fitRunCount =
     new java.util.concurrent.atomic.AtomicLong(0L)
 
+  /** [[fitPatterns]] served from [[graft.model.FitCache]]. */
   def cachedPatterns(docs: DataFrame, textCol: String = "text",
-                     k: Int = 48, minLen: Int = 4): Seq[String] = {
-    val key = "ac:" + graft.model.PlanKey.of(docs) +
-      s":$textCol:$k:$minLen"
-    fitOnceCache.computeIfAbsent(key,
-      _ => fitPatterns(docs, textCol, k, minLen))
-  }
+                     k: Int = 48, minLen: Int = 4): Seq[String] =
+    graft.model.FitCache.getOrBuild(graft.model.FitCache.Patterns, docs,
+      textCol, k, minLen)(fitPatterns(docs, textCol, k, minLen))
 
   /** struct(n_hits, n_patterns) per document under `patterns`. */
   def acStats(text: Column, patterns: Seq[String]): Column =

@@ -96,24 +96,19 @@ object UnigramLm {
     }.toSeq.sortBy(_._1)
   }
 
-  private val fitOnceCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(String, Long)]]()
-
   /** Count of ACTUAL inventory fits (cache hits leave it untouched). */
   private[graft] val fitRunCount =
     new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** [[fitInventory]] memoized per (corpus plan, params) — the
+  /** [[fitInventory]] served from [[graft.model.FitCache]] — the
     * trained-tokenizer analog of Similarity.trainedCentroids: first
     * call pays the two fit aggregations; every later execution reads
     * the inventory literals with zero training jobs.
     */
   def cachedInventory(docs: DataFrame,
-                      textCol: String = "text"): Seq[(String, Long)] = {
-    val key = "uni:" + graft.model.PlanKey.of(docs) +
-      s":$textCol:$MaxWordLen:$MaxPieceLen:$TopMultiPieces"
-    fitOnceCache.computeIfAbsent(key, _ => fitInventory(docs, textCol))
-  }
+                      textCol: String = "text"): Seq[(String, Long)] =
+    graft.model.FitCache.getOrBuild(graft.model.FitCache.Inventory, docs,
+      textCol)(fitInventory(docs, textCol))
 
   /** struct(n_tokens, n_pieces, cost_units) per document — Viterbi
     * segmentation of every whitespace token under `inventory`.

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.model.Artifacts
+import graft.model.{Artifacts, FitCache}
 import graft.sim.Similarity
 import graft.text.{MultiPattern, UnigramLm}
 
@@ -111,9 +111,9 @@ class ArtifactsSpec extends SparkSpec {
     val b = back.collect().map(_.toSeq).toSet
     assert(a == b, "span rows must round-trip exactly")
     // consuming the loaded table is a plain scan — no SA rebuild
-    val builds = SuffixRepeats.buildRunCount.get()
+    val builds = FitCache.builds(FitCache.SpanIndex)
     val cov = back.agg(sum(col("covered_tokens"))).head().getLong(0)
-    assert(SuffixRepeats.buildRunCount.get() == builds)
+    assert(FitCache.builds(FitCache.SpanIndex) == builds)
     assert(cov >= 0)
   }
 
@@ -131,10 +131,10 @@ class ArtifactsSpec extends SparkSpec {
     Dedup.clearSigCache()
     val loaded = Artifacts.loadSigs(spark, p)
     Dedup.installSigs(d, loaded)
-    val builds = Dedup.sigBuildCount.get()
+    val builds = FitCache.builds(FitCache.MinhashSigs)
     val served = Dedup.minhashPairs(d, serveSigs = true)
       .collect().map(_.toSeq).toSet
-    assert(Dedup.sigBuildCount.get() == builds,
+    assert(FitCache.builds(FitCache.MinhashSigs) == builds,
       "a loaded signature table must serve with ZERO build jobs")
     assert(served == warmPairs,
       "pairs from the loaded table must equal the fitted path's")
@@ -145,23 +145,26 @@ class ArtifactsSpec extends SparkSpec {
       "zero pair builds") {
     import graft.dedup.Dedup
     val d = spark.read.parquet(s"$dir/documents.parquet")
-    Dedup.clearPairCache(); Dedup.clearSigCache()
+    FitCache.clear(FitCache.NearDupPairs)
+    Dedup.clearSigCache()
     val pairs = Dedup.nearDuplicates(d, estThreshold = 0.0,
       exactThreshold = 0.35, servePairs = true)
     val rows = pairs.collect().map(_.toSeq).toSet
     val p = tmp("pairs")
     Artifacts.savePairs(pairs, p)
-    Dedup.clearPairCache(); Dedup.clearSigCache()
+    FitCache.clear(FitCache.NearDupPairs)
+    Dedup.clearSigCache()
     Dedup.installPairs(d, Artifacts.loadPairs(spark, p),
       estThreshold = 0.0, exactThreshold = 0.35)
-    val builds = Dedup.pairBuildCount.get()
+    val builds = FitCache.builds(FitCache.NearDupPairs)
     val served = Dedup.nearDuplicates(d, estThreshold = 0.0,
         exactThreshold = 0.35, servePairs = true)
       .collect().map(_.toSeq).toSet
-    assert(Dedup.pairBuildCount.get() == builds,
+    assert(FitCache.builds(FitCache.NearDupPairs) == builds,
       "a loaded pair index must serve with ZERO builds")
     assert(served == rows)
-    Dedup.clearPairCache(); Dedup.clearSigCache()
+    FitCache.clear(FitCache.NearDupPairs)
+    Dedup.clearSigCache()
   }
 
   test("LM score frame persists; a loaded frame serves the scoring " +
@@ -185,12 +188,12 @@ class ArtifactsSpec extends SparkSpec {
     NgramLm.clear()
     val loaded = Artifacts.loadScoreFrame(spark, p)
     NgramLm.installScoreFrame(base, "artspec", loaded)
-    val builds = NgramLm.scoreRunCount.get()
+    val builds = FitCache.builds(FitCache.LmScore)
     val served = NgramLm.cachedScoreFrame(base, "artspec") {
       fail("the build branch must not run when a loaded frame is " +
         "installed"); base
     }
-    assert(NgramLm.scoreRunCount.get() == builds)
+    assert(FitCache.builds(FitCache.LmScore) == builds)
     assert(served.collect().map(_.toSeq).toSet == rows,
       "the loaded frame must be bit-equal to the built one")
     NgramLm.clear()

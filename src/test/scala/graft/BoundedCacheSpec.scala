@@ -1,57 +1,80 @@
 package graft
 
-import org.apache.spark.sql.functions._
-import graft.model.BoundedCache
+import org.apache.spark.sql.execution.LogicalRDD
+import graft.model.{Checkpoints, FitCache}
 
-/** The fit-once memo bound (r10 verdict "what's wrong" item 2): the
-  * plan-keyed caches evict LRU under pressure, fire the storage
-  * release hook, keep the clear() hatches — and an evicted entry
+/** The fit-once registry's bound (r10 verdict "what's wrong" item 2):
+  * [[FitCache]] evicts LRU across all kinds under pressure, fires the
+  * storage release hook, keeps the clear hatches — and an evicted entry
   * rebuilds identically on re-request (no correctness change).
   */
 class BoundedCacheSpec extends SparkSpec {
+  import spark.implicits._
+
+  private def persisted(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.analyzed match {
+      case l: LogicalRDD =>
+        spark.sparkContext.getPersistentRDDs.contains(l.rdd.id)
+      case _ => false
+    }
 
   test("LRU semantics: access promotes, insertion past the cap " +
       "evicts the eldest and fires the hook") {
-    var evicted = List.empty[String]
-    val c = new BoundedCache[String](2, (v: String) => evicted ::= v)
-    c.put("a", "va"); c.put("b", "vb")
-    assert(c.get("a") == "va") // promote a → b is now LRU
-    c.put("c", "vc")           // evicts b
-    assert(c.size == 2)
-    assert(c.get("b") == null && c.get("a") == "va" &&
-      c.get("c") == "vc")
-    assert(evicted == List("vb"))
-    // clear() is the staleness hatch and must NOT fire the hook
-    c.clear()
-    assert(c.size == 0 && evicted == List("vb"))
-    // forEach iterates a snapshot and tolerates removal mid-walk
-    c.put("x", "1"); c.put("y", "2")
-    c.forEach((k, _) => c.remove(k))
-    assert(c.size == 0)
+    val key = Seq(1L).toDF("x")
+    val a = Checkpoints.materialize(Seq(1L, 2L).toDF("x"))
+    val b = Checkpoints.materialize(Seq(3L, 4L).toDF("x"))
+    FitCache.clear(FitCache.Kinds: _*)
+    FitCache.install(FitCache.SpanIndex, key, a, "a")
+    FitCache.install(FitCache.SpanIndex, key, b, "b")
+    def serve(tag: String): org.apache.spark.sql.DataFrame =
+      FitCache.getOrBuild(FitCache.SpanIndex, key, tag)(fail("rebuilt"))
+    assert(serve("a") eq a) // promote a → b is now LRU
+    val evicted = FitCache.evictions(FitCache.SpanIndex)
+    (1 until FitCache.MaxEntries).foreach { i => // fills the cap, + 1
+      FitCache.install(FitCache.CorpusCount, key, i.toLong, i)
+    }
+    assert(FitCache.size == FitCache.MaxEntries)
+    assert(FitCache.evictions(FitCache.SpanIndex) == evicted + 1)
+    assert(serve("a") eq a)
+    assert(!persisted(b) && persisted(a),
+      "eviction must release the evicted entry's storage, only its")
+    val builds = FitCache.builds(FitCache.SpanIndex)
+    assert(FitCache.getOrBuild(FitCache.SpanIndex, key, "b")(a) eq a)
+    assert(FitCache.builds(FitCache.SpanIndex) == builds + 1)
+    // clear is the hatch and must NOT fire the hook
+    FitCache.clear(FitCache.Kinds: _*)
+    assert(FitCache.size == 0 && persisted(a))
+    Checkpoints.release(a)
   }
 
   test("sigCache eviction under pressure: the evicted corpus entry " +
       "rebuilds bit-identically on re-request") {
     import graft.dedup.Dedup
-    import spark.implicits._
     val d = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
     Dedup.clearSigCache()
     val sigs0 = Dedup.signatureTable(d)
     val rows0 = sigs0.collect().map(_.toSeq).toSet // BEFORE eviction
-    // flood the memo with MaxMemoEntries distinct keys (fake frames
+    // flood the registry with MaxEntries distinct keys (fake frames
     // under distinct params) — the real entry is the LRU and evicts;
-    // its release hook runs (a guarded no-op for this local frame)
+    // its release hook runs
     val fake = Seq(("f", Seq("x"), "fp")).toDF("doc_id", "sig", "sig_fp")
-    (1 to graft.model.NgramLm.MaxMemoEntries).foreach { i =>
+    (1 to FitCache.MaxEntries).foreach { i =>
       Dedup.installSigs(d, fake, k = 1000 + i)
     }
-    val before = Dedup.sigBuildCount.get()
+    val before = FitCache.builds(FitCache.MinhashSigs)
     val rebuilt = Dedup.signatureTable(d) // miss → rebuild
-    assert(Dedup.sigBuildCount.get() == before + 1,
+    assert(FitCache.builds(FitCache.MinhashSigs) == before + 1,
       "the evicted entry must rebuild, not serve a ghost")
     assert(rebuilt.collect().map(_.toSeq).toSet == rows0,
       "rebuild after eviction must be bit-identical")
     Dedup.clearSigCache()
+  }
+
+  test("the bound holds the measured working set") {
+    // a Bench-style process (every query at sf0.001, then one sf0.01
+    // round) creates 42 entries; the bound must keep all of them
+    assert(FitCache.MaxEntries >= 42,
+      s"${FitCache.MaxEntries} < 42: a catalog pass would evict and refit")
   }
 }

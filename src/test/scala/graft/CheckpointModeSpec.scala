@@ -1,7 +1,7 @@
 package graft
 
 import graft.dedup.{Dedup, SuffixRepeats}
-import graft.model.Checkpoints
+import graft.model.{Checkpoints, FitCache}
 
 /** Reliable-checkpoint mode (r7 verdict item 3): with
   * `graft.checkpoint.dir` set, every fixpoint/index lineage
@@ -39,10 +39,10 @@ class CheckpointModeSpec extends SparkSpec {
       .collect().map(_.toSeq).toSet
     val dir = ckDir()
     val reliable = withReliable(dir.toString) {
-      val before = SuffixRepeats.buildRunCount.get()
+      val before = FitCache.builds(FitCache.SpanIndex)
       val r = SuffixRepeats.repeatedSpans(frame, 3, parts = 5)
         .collect().map(_.toSeq).toSet
-      assert(SuffixRepeats.buildRunCount.get() == before + 1,
+      assert(FitCache.builds(FitCache.SpanIndex) == before + 1,
         "reliable-mode call must have actually rebuilt")
       r
     }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.dedup.Dedup
 import graft.sim.Similarity
 import graft.text.TextAnalysis
+import graft.model.FitCache
 
 /** Scale-operator semantics: fingerprint/exact dedup, MinHash-LSH,
   * SimHash, n-gram Jaccard, cosine similarity + ANN.
@@ -117,14 +118,15 @@ class DedupSimilaritySpec extends SparkSpec {
       "candidate-stage prune") {
     val d = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
-    Dedup.clearPairCache(); Dedup.clearSigCache()
+    FitCache.clear(FitCache.NearDupPairs)
+    Dedup.clearSigCache()
     val inlineAll = Dedup.nearDuplicates(d, estThreshold = 0.0,
         exactThreshold = 0.35).collect().map(_.toSeq).toSet
-    val b0 = Dedup.pairBuildCount.get()
+    val b0 = FitCache.builds(FitCache.NearDupPairs)
     val servedAll = Dedup.nearDuplicates(d, estThreshold = 0.0,
         exactThreshold = 0.35, servePairs = true)
       .collect().map(_.toSeq).toSet
-    assert(Dedup.pairBuildCount.get() == b0 + 1)
+    assert(FitCache.builds(FitCache.NearDupPairs) == b0 + 1)
     assert(servedAll == inlineAll,
       "the served table must equal the inline rescore")
     // a pure pair-id predicate applied to the served table == the
@@ -144,10 +146,11 @@ class DedupSimilaritySpec extends SparkSpec {
     val servedFiltered = Dedup.nearDuplicates(d, estThreshold = 0.0,
         exactThreshold = 0.35, pairFilter = touch, servePairs = true)
       .select($"id_a", $"id_b").collect().map(_.toSeq).toSet
-    assert(Dedup.pairBuildCount.get() == b0 + 1,
+    assert(FitCache.builds(FitCache.NearDupPairs) == b0 + 1,
       "the filtered consumer must ride the SAME build")
     assert(servedFiltered == inlineFiltered)
-    Dedup.clearPairCache(); Dedup.clearSigCache()
+    FitCache.clear(FitCache.NearDupPairs)
+    Dedup.clearSigCache()
   }
 
   test("simhash: equal texts equal, near texts close in hamming") {
@@ -729,16 +732,16 @@ class DedupSimilaritySpec extends SparkSpec {
       SparkEntry.queries(q)(spark, "/root/testdata/sf0.001")
         .write.mode("overwrite").format("noop").save()
     run("q25_lsh_pairs")
-    val builds = Dedup.sigBuildCount.get()
+    val builds = FitCache.builds(FitCache.MinhashSigs)
     run("q70_neardup_rescore")
     run("q114_containment")
     run("q25_lsh_pairs")
-    assert(Dedup.sigBuildCount.get() == builds,
+    assert(FitCache.builds(FitCache.MinhashSigs) == builds,
       "q70/q114/q25-again must serve q25's signature table " +
         "(same corpus plan, k, shingle size)")
     Dedup.clearSigCache()
     run("q25_lsh_pairs")
-    assert(Dedup.sigBuildCount.get() > builds,
-      "clearSigCache is the staleness hatch: next run rebuilds")
+    assert(FitCache.builds(FitCache.MinhashSigs) > builds,
+      "clearSigCache drops the table: the next run rebuilds")
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.sim.{Pq, Similarity}
+import graft.model.FitCache
 
 /** Fit-once caching of trained ANN artifacts (r6 verdict item 1):
   * the SECOND execution of a trained-quantizer query must launch ZERO
@@ -89,24 +90,23 @@ class FitCacheSpec extends SparkSpec {
     // r7 verdict item 4: q129's shard count (and phashGroups' dup
     // groups) derive from a memoized corpus count — the SECOND
     // construction of a plan-identical frame must be a map hit
-    import graft.model.CorpusStats
     val dir = "/root/testdata/sf0.001"
     def construct(): Unit =
       QueriesScale.queries("q129_epoch_shuffle")(spark, dir)
     construct()
-    val afterFirst = CorpusStats.countRunCount.get()
+    val afterFirst = FitCache.builds(FitCache.CorpusCount)
     construct()
     construct()
-    assert(CorpusStats.countRunCount.get() == afterFirst,
+    assert(FitCache.builds(FitCache.CorpusCount) == afterFirst,
       "re-constructing q129 must not launch another count job")
     // a different corpus plan is a distinct entry (a real count)
     val other = spark.read
       .parquet(s"$dir/documents.parquet").filter(col("doc_id") % 2 === 0)
-    val before = CorpusStats.countRunCount.get()
-    assert(CorpusStats.cachedCount(other) >= 0)
-    assert(CorpusStats.countRunCount.get() == before + 1)
-    assert(CorpusStats.cachedCount(other) >= 0)
-    assert(CorpusStats.countRunCount.get() == before + 1)
+    val before = FitCache.builds(FitCache.CorpusCount)
+    assert(FitCache.count(other) >= 0)
+    assert(FitCache.builds(FitCache.CorpusCount) == before + 1)
+    assert(FitCache.count(other) >= 0)
+    assert(FitCache.builds(FitCache.CorpusCount) == before + 1)
   }
 
   test("q125 and q134 share one suffix-array index build") {
@@ -119,10 +119,40 @@ class FitCacheSpec extends SparkSpec {
       QueriesScale.queries(name)(spark, dir).write
         .mode("overwrite").format("noop").save()
     run("q134_suffix_repeats")
-    val afterFirst = SuffixRepeats.buildRunCount.get()
+    val afterFirst = FitCache.builds(FitCache.SpanIndex)
     run("q125_dup_substring_coverage")
     run("q134_suffix_repeats")
-    assert(SuffixRepeats.buildRunCount.get() == afterFirst,
+    assert(FitCache.builds(FitCache.SpanIndex) == afterFirst,
       "q125/q134-again must reuse the cached span table (zero builds)")
+  }
+
+  test("the served-state query family leaves no persisted frame the " +
+      "registry does not own") {
+    // the r14 e0 class of leak: a frame persisted by a query and never
+    // released outlives it, and CacheManager plan matching then serves
+    // it to later queries. Every persisted RDD a query leaves must be
+    // a registry entry's; none may stay in the CacheManager.
+    import org.apache.spark.sql.execution.LogicalRDD
+    val sc = spark.sparkContext
+    import org.apache.spark.sql.graftshim.TestShims.cachedEntries
+    val dir = "/root/testdata/sf0.001"
+    FitCache.clear(FitCache.Kinds: _*) // every entry is built below
+    val before = sc.getPersistentRDDs.keySet
+    val cached = cachedEntries(spark)
+    Seq("q36_ann_ivf", "q62_ivfpq_topk", "q111_residual_ivfpq",
+      "q127_ivf_cell_stats", "q125_dup_substring_coverage",
+      "q134_suffix_repeats", "q136_ngram_perplexity",
+      "q137_dsir_weights", "q151_kneser_ney", "q156_curation_capstone",
+      "q25_lsh_pairs", "q70_neardup_rescore", "q114_containment",
+      "q163_takedown_neardup").foreach { n =>
+      QueriesScale.queries(n)(spark, dir).write
+        .mode("overwrite").format("noop").save()
+    }
+    val owned = FitCache.ownedFrames.map(_.queryExecution.analyzed)
+      .collect { case l: LogicalRDD => l.rdd.id }.toSet
+    val leaked = sc.getPersistentRDDs.keySet -- before -- owned
+    assert(leaked.isEmpty, "persisted but owned by no registry entry: " +
+      leaked.map(sc.getPersistentRDDs(_).toDebugString).mkString("\n"))
+    assert(cachedEntries(spark) == cached)
   }
 }

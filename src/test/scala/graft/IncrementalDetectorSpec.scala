@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.dedup.Dedup
-import graft.model.Artifacts
+import graft.model.{Artifacts, FitCache}
 
 /** Batch-proportional incremental edge discovery (r13 — r12 verdict
   * Next #1): [[Dedup.simhashBatchEdges]] / [[Dedup.minhashBatchEdges]]
@@ -275,19 +275,19 @@ class IncrementalDetectorSpec extends SparkSpec {
     val d = corpus(30)
     val p = Files.createTempDirectory("graft_shsigs").toString + "/s"
     Dedup.clearSigCache()
-    val before = Dedup.simhashBuildCount.get()
+    val before = FitCache.builds(FitCache.SimhashSigs)
     val sigs = Dedup.simhashTable(d)
-    assert(Dedup.simhashBuildCount.get() == before + 1)
+    assert(FitCache.builds(FitCache.SimhashSigs) == before + 1)
     // a second request serves from the cache — no rebuild
     Dedup.simhashTable(d)
-    assert(Dedup.simhashBuildCount.get() == before + 1)
+    assert(FitCache.builds(FitCache.SimhashSigs) == before + 1)
     Artifacts.saveSimhashSigs(sigs, p)
     // "fresh session": drop the cache, install the LOADED table
     Dedup.clearSigCache()
     val loaded = Artifacts.loadSimhashSigs(spark, p)
     Dedup.installSimhashSigs(d, loaded)
     val servedAgain = Dedup.simhashTable(d)
-    assert(Dedup.simhashBuildCount.get() == before + 1,
+    assert(FitCache.builds(FitCache.SimhashSigs) == before + 1,
       "serving a loaded table must schedule zero signature builds")
     assert(servedAgain.collect().map(r =>
         (r.getLong(0), r.getString(1))).toSet ==

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.model.FitCache
 
 /** q151's interpolated Kneser–Ney bigram LM against hand-computed
   * probabilities on a corpus small enough to verify on paper.
@@ -105,10 +106,10 @@ class KneserNeySpec extends SparkSpec {
       "the trigram fit must add exactly ONE fit (order-3 counts) — " +
         "the bigram order comes from the shared cache entry")
     val afterTrigram = NgramLm.fitRunCount.get()
-    val builds = NgramLm.scoreRunCount.get()
+    val builds = FitCache.builds(FitCache.LmScore)
     go("q160_kn_trigram")
     assert(NgramLm.fitRunCount.get() == afterTrigram &&
-      NgramLm.scoreRunCount.get() == builds,
+      FitCache.builds(FitCache.LmScore) == builds,
       "re-execution must serve the cached trigram score frame")
   }
 

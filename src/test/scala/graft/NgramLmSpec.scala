@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
-import graft.model.{Artifacts, NgramLm}
+import graft.model.{Artifacts, FitCache, NgramLm}
 import graft.text.TextAnalysis
 
 /** Fit-once n-gram LM caching (r8 verdict item 1): the q136/q151
@@ -83,23 +83,23 @@ class NgramLmSpec extends SparkSpec {
     run("q136_ngram_perplexity")
     run("q137_dsir_weights")
     run("q151_kneser_ney")
-    val builds = NgramLm.scoreRunCount.get()
+    val builds = FitCache.builds(FitCache.LmScore)
     val fits = NgramLm.fitRunCount.get()
     run("q166_minkprob") // its own frame: exactly ONE build
-    val builds2 = NgramLm.scoreRunCount.get()
+    val builds2 = FitCache.builds(FitCache.LmScore)
     assert(builds2 == builds + 1)
     run("q136_ngram_perplexity")
     run("q151_kneser_ney")
     run("q156_curation_capstone")
     run("q166_minkprob")
-    assert(NgramLm.scoreRunCount.get() == builds2,
+    assert(FitCache.builds(FitCache.LmScore) == builds2,
       "re-executions and q156 must serve the cached score frames " +
         "(zero score-frame builds)")
     assert(NgramLm.fitRunCount.get() == fits,
       "serving a score frame must not refit any model either")
     NgramLm.clear()
     run("q136_ngram_perplexity")
-    assert(NgramLm.scoreRunCount.get() > builds,
+    assert(FitCache.builds(FitCache.LmScore) > builds,
       "clear() must force a score-frame rebuild (staleness hatch)")
   }
 

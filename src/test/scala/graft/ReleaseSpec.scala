@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.operators.Release
 import graft.sampling.Packing
 import graft.sim.Similarity
+import graft.model.FitCache
 
 /** Release management (r11): version diff, content-addressed shard
   * manifest, dirty-shard decision, semantic decontamination, and the
@@ -256,22 +257,22 @@ class ReleaseSpec extends SparkSpec {
     val bench = spark.read
       .parquet("/root/testdata/sf0.001/embeddings.parquet")
       .limit(4)
-    Similarity.clearBenchProbeCache()
+    FitCache.clear(FitCache.BenchProbe)
     val empty = bench.filter(col("vec_id") < -1)
     intercept[IllegalArgumentException] {
       Similarity.benchContamination(corpus, empty, threshold = 0.5)
     }
     // r11 ADVICE item 3: harness loops construct the query many
     // times — only the FIRST construction pays the limit-1 probe job
-    val before = Similarity.benchProbeRunCount.get()
+    val before = FitCache.builds(FitCache.BenchProbe)
     Similarity.benchContamination(corpus, bench, threshold = 0.5)
-    assert(Similarity.benchProbeRunCount.get() == before + 1)
+    assert(FitCache.builds(FitCache.BenchProbe) == before + 1)
     (1 to 3).foreach { _ =>
       Similarity.benchContamination(corpus, bench, threshold = 0.5)
     }
-    assert(Similarity.benchProbeRunCount.get() == before + 1,
+    assert(FitCache.builds(FitCache.BenchProbe) == before + 1,
       "re-constructions must ride the memoized verdict")
-    Similarity.clearBenchProbeCache()
+    FitCache.clear(FitCache.BenchProbe)
   }
 
   test("benchContamination probe re-keys when the bench file is " +
@@ -282,11 +283,11 @@ class ReleaseSpec extends SparkSpec {
       .createTempDirectory("graft_bench").toString + "/b"
     Seq((1L, Array(1.0f, 0.0f))).toDF("vec_id", "embedding")
       .write.mode("overwrite").parquet(dir)
-    Similarity.clearBenchProbeCache()
-    val before = Similarity.benchProbeRunCount.get()
+    FitCache.clear(FitCache.BenchProbe)
+    val before = FitCache.builds(FitCache.BenchProbe)
     Similarity.benchContamination(corpus, spark.read.parquet(dir),
       threshold = 0.5)
-    assert(Similarity.benchProbeRunCount.get() == before + 1)
+    assert(FitCache.builds(FitCache.BenchProbe) == before + 1)
     // rewrite the bench table IN PLACE to empty — the plan-only key
     // would keep the stale non-empty verdict; the content key must
     // re-probe and fail loudly
@@ -296,7 +297,74 @@ class ReleaseSpec extends SparkSpec {
       Similarity.benchContamination(corpus, spark.read.parquet(dir),
         threshold = 0.5)
     }
-    Similarity.clearBenchProbeCache()
+    FitCache.clear(FitCache.BenchProbe)
+  }
+
+  /** Serve state over a parquet dir, rewrite the dir IN PLACE with
+    * `v2`, re-read it and serve again — with no clear call between.
+    * The second answer must be the state fitted on the NEW bytes: what
+    * `serve` gives over `v2` itself, a frame the registry keys apart.
+    * Returns what went wrong, if anything.
+    */
+  private def rewritten[T](name: String, v1: DataFrame, v2: DataFrame)
+                          (serve: DataFrame => T): Option[String] = {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_stale").toString + "/t"
+    v1.write.mode("overwrite").parquet(dir)
+    val first = serve(spark.read.parquet(dir))
+    v2.write.mode("overwrite").parquet(dir)
+    val again = serve(spark.read.parquet(dir))
+    if (again == first) Some(s"$name served the state of the old bytes")
+    else if (again != serve(v2)) Some(s"$name differs from a fresh fit")
+    else None
+  }
+
+  test("every file-backed fit-once kind re-keys when its input is " +
+      "rewritten in place") {
+    import graft.dedup.{Dedup, SuffixRepeats}
+    import graft.model.NgramLm
+    import graft.sim.Pq
+    import graft.text.{MultiPattern, UnigramLm}
+    def docs(texts: String*): DataFrame = texts.zipWithIndex
+      .map { case (t, i) => (i.toLong + 1, "en", t) }
+      .toDF("doc_id", "lang", "text")
+    val d1 = docs("the quick brown fox jumps", "over the lazy dog today",
+      "the quick brown fox jumps")
+    val d2 = docs("alpha beta gamma delta epsilon",
+      "zeta eta theta iota kappa", "zeta eta theta iota kappa",
+      "lambda lambda lambda lambda mu mu mu mu")
+    def rows(df: DataFrame): Set[Seq[Any]] =
+      df.collect().map(_.toSeq).toSet
+    def tk(df: DataFrame): DataFrame = df.select(col("doc_id"),
+      col("lang"), split(col("text"), " ").as("tk"))
+    def vecs(xs: (Float, Float)*): DataFrame = xs.zipWithIndex
+      .map { case ((a, b), i) => (i.toLong, Array(a, b)) }
+      .toDF("vec_id", "embedding")
+    val v1 = vecs((1f, 0.1f), (0.9f, 0.2f), (1f, 0f))
+    val v2 = vecs((0.1f, 1f), (0.2f, 0.9f))
+    val wrong = Seq(
+      rewritten("corpus count", d1, d2)(FitCache.count),
+      rewritten("MinHash table", d1, d2)(d => rows(Dedup.signatureTable(d))),
+      rewritten("SimHash table", d1, d2)(d => rows(Dedup.simhashTable(d))),
+      rewritten("served pairs", d1, d2)(
+        d => rows(Dedup.nearDuplicates(d, servePairs = true))),
+      rewritten("bigram LM", d1, d2) { d =>
+        val m = NgramLm.cachedBigram(tk(d))
+        (rows(m.c12), m.nall)
+      },
+      rewritten("LM score frame", d1, d2)(d => rows(
+        NgramLm.cachedScoreFrame(tk(d), "stale")(tk(d).drop("tk")))),
+      rewritten("span index", d1, d2)(d => rows(
+        SuffixRepeats.repeatedSpanList(d.select(col("doc_id"),
+          split(col("text"), " ").as("tokens")), minLen = 2, parts = 4))),
+      rewritten("centroids", v1, v2)(v =>
+        Similarity.trainedCentroids(v, nlist = 1, iters = 1).map(_.toSeq)),
+      rewritten("codebooks", v1, v2)(
+        Pq.trainedCodebooks(_, m = 1, k = 1, iters = 1)),
+      rewritten("patterns", d1, d2)(MultiPattern.cachedPatterns(_, k = 2)),
+      rewritten("inventory", d1, d2)(UnigramLm.cachedInventory(_))
+    ).flatten
+    assert(wrong.isEmpty, wrong.mkString("; "))
   }
 
   test("ensemble closure merges chains split across detectors") {

@@ -1,6 +1,7 @@
 package graft
 
 import graft.dedup.SuffixRepeats
+import graft.model.FitCache
 
 /** Suffix-array exact-substring repeats (r6 verdict item 4): true
   * arbitrary-length span semantics — the Lee et al. ACL'22 "≥ L-token
@@ -107,15 +108,15 @@ class SuffixRepeatsSpec extends SparkSpec {
     val frame = df(docs)
     val first = SuffixRepeats.repeatedSpans(frame, 2, parts = 4)
       .collect().map(_.toSeq).toSet
-    val before = SuffixRepeats.buildRunCount.get()
+    val before = FitCache.builds(FitCache.SpanIndex)
     val again = SuffixRepeats.repeatedSpans(frame, 2, parts = 4)
       .collect().map(_.toSeq).toSet
-    assert(SuffixRepeats.buildRunCount.get() == before,
+    assert(FitCache.builds(FitCache.SpanIndex) == before,
       "identical corpus plan re-ran the SA build")
     assert(again == first)
     // different params miss the cache (and count a build)
     SuffixRepeats.repeatedSpans(frame, 3, parts = 4).collect()
-    assert(SuffixRepeats.buildRunCount.get() == before + 1)
+    assert(FitCache.builds(FitCache.SpanIndex) == before + 1)
   }
 
   test("empty and single-token docs are handled") {

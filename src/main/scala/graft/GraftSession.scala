@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** ONE session-config site for every engine main (r14 — r13 verdict
   * item 9: the r13 AQE cached-plan flag lived in Bench + four dev
@@ -58,6 +58,36 @@ object GraftSession {
     "spark.sql.ansi.enabled" -> "false",
     "spark.sql.codegen.cache.maxEntries" -> CodegenCacheMaxEntries.toString,
     "spark.ui.enabled" -> "false")
+
+  /** Every conf a catalog query sets on its session before it plans,
+    * in order. They are set per query, not only in [[settings]]: a
+    * caller may run [[SparkEntry.queries]] on a session it built
+    * itself, and `nanosAsLong` is not one of the [[settings]].
+    *  - ANSI off: the reference's pandas semantics (coerce-to-null
+    *    casts, non-failing arithmetic) are the non-ANSI ones, and the
+    *    DuckDB oracle's try_cast matches that.
+    *  - nanosAsLong: events.parquet has carried TIMESTAMP(NANOS) in
+    *    some rounds (unrepresentable in Spark — read as
+    *    nanos-since-epoch longs via this flag) and TIMESTAMP(MICROS) in
+    *    others (read as TIMESTAMP_NTZ). Event-time math is done in
+    *    integer micros via `EventTime.epochUs`, which adapts to
+    *    whichever the scan produced (the DuckDB oracle uses epoch_us).
+    *  - UTC: `epochUs`' NTZ→LTZ cast is only the identity under UTC.
+    *  - 1m advisory: the default 64MB AQE advisory size coalesces the
+    *    catalog's ~30MB shuffles to one partition.
+    */
+  val queryConfs: Seq[(String, String)] = Seq(
+    "spark.sql.ansi.enabled" -> "false",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1m")
+
+  /** A catalog query that applies [[queryConfs]] before it plans. */
+  def query(f: (SparkSession, String) => DataFrame)
+      : (SparkSession, String) => DataFrame = { (spark, dir) =>
+    queryConfs.foreach { case (k, v) => spark.conf.set(k, v) }
+    f(spark, dir)
+  }
 
   /** Common builder: `master` e.g. "local[32]". */
   def builder(master: String, shufflePartitions: String)

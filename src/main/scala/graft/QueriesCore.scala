@@ -25,28 +25,7 @@ object QueriesCore {
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
-  /** Spark 4 defaults to ANSI mode; the reference's pandas semantics
-    * (coerce-to-null casts, non-failing arithmetic) are the non-ANSI
-    * ones, and the DuckDB oracle's try_cast matches that.
-    */
-  private def q(f: (SparkSession, String) => DataFrame)
-      : (SparkSession, String) => DataFrame = { (spark, dir) =>
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    // events.parquet has carried TIMESTAMP(NANOS) in some rounds
-    // (unrepresentable in Spark — read as nanos-since-epoch longs via
-    // this flag) and TIMESTAMP(MICROS) in others (read as
-    // TIMESTAMP_NTZ). Event-time math is done in integer micros via
-    // EventTime.epochUs, which adapts to whichever the scan produced
-    // (exact, engine-portable: the DuckDB oracle uses epoch_us).
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // epochUs' NTZ→LTZ cast is only the identity under UTC; pin it
-    // here too so the helper is correct regardless of the harness.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    // keep post-shuffle parallelism: the default 64MB AQE advisory
-    // size coalesces these ~30MB shuffles to one partition
-    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
-    f(spark, dir)
-  }
+  import GraftSession.{query => q}
 
   // ---- synthetic odds view over lineitem (deterministic) ----
 

@@ -260,17 +260,7 @@ object QueriesScale {
       .distinct()
   }
 
-  private def q(f: (SparkSession, String) => DataFrame)
-      : (SparkSession, String) => DataFrame = { (spark, dir) =>
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
-    // EventTime.epochUs's TIMESTAMP_NTZ branch is only the identity
-    // under UTC — pin it here (as QueriesCore does) so q80-shaped
-    // queries are correct regardless of the harness's session zone
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    f(spark, dir)
-  }
+  import GraftSession.{query => q}
 
   /** langID oracle literals, generated from the SAME profile
     * constants the native expression reads (trigrams are [a-z ]-only,

@@ -1291,8 +1291,9 @@ object Dedup {
     // clusters-chain + detector-chain back to back; overlapped, it
     // pays max of the two. Each future acts on its own Dataset
     // (session bound to the frame), exceptions propagate through
-    // Await, and the fit-once caches both legs may touch are
-    // ConcurrentHashMaps.
+    // Await, and both legs may touch the fit-once registry, FitCache:
+    // its LinkedHashMap is only read or written under the map's lock,
+    // and its put settles racing builds of one key.
     val (lab, e) = {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration

@@ -72,10 +72,13 @@ object Snapshots {
     * to latest-per-key only. At scale the append-only history grows
     * without bound and every `latest` view pays a window over the full
     * log; periodic compaction bounds that cost while `latest` semantics
-    * stay identical. Writes to a temp sibling then swaps, so a reader
-    * never sees a half-written table. `keyCols` follow [[latest]]'s
-    * contract (coarsest first); each written file holds whole
-    * `keyCols.head` groups, the hash partitions of that one shuffle.
+    * stay identical. Writes to a temp sibling, then swaps it in with
+    * two renames: the live table moves aside, then the temp takes its
+    * place. A reader never sees a half-written table, but between the
+    * two renames it sees NO table at `canonicalPath` — a read there
+    * fails. `keyCols` follow [[latest]]'s contract (coarsest first);
+    * each written file holds whole `keyCols.head` groups, the hash
+    * partitions of that one shuffle.
     */
   def compact(spark: SparkSession, canonicalPath: String,
               keyCols: Seq[String], tsCol: String,

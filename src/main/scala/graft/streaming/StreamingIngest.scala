@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
-import graft.model.Schemas
+import graft.dedup.Dedup
+import graft.model.{Artifacts, Schemas, VersionedTable}
 
 /** Structured-Streaming ingestion (capability parity + upgrade for the
   * reference's poll-and-append loop, SURVEY §2.11).
@@ -14,8 +15,46 @@ import graft.model.Schemas
   * source over a landing directory feeding an append sink on the
   * canonical table — same event-log semantics, incremental execution,
   * exactly-once via checkpointing.
+  *
+  * Every store publishes through [[graft.model.VersionedTable]], whose
+  * doc carries the crash argument. A store's doc says what goes under
+  * its marker and what "before" is: the committed state, never
+  * including the batch being published, that a replay recomputes from.
   */
 object StreamingIngest {
+
+  // The stores' on-disk layouts; fixed, so existing tables stay readable
+  private def canonical(spark: SparkSession, root: String) =
+    new VersionedTable(spark, root, "_txn", "", "batch")
+  private def cycles(spark: SparkSession, root: String, dir: String = "") =
+    new VersionedTable(spark, root, "_done", dir, "batch")
+  private def labelBases(spark: SparkSession, root: String) =
+    new VersionedTable(spark, root, "_basedone", "base", "version")
+  private def labelDeltas(spark: SparkSession, root: String) =
+    new VersionedTable(spark, root, "_done", "delta", "batch",
+      Some(labelBases(spark, root)))
+  private def ivfBases(spark: SparkSession, root: String) =
+    new VersionedTable(spark, root, "_ivfbase", "base", "upto")
+  private def ivfDeltas(spark: SparkSession, root: String) =
+    new VersionedTable(spark, root, "_done", "delta", "batch",
+      Some(ivfBases(spark, root)))
+
+  /** Every committed version of `t` as one frame. */
+  private def load(spark: SparkSession, t: VersionedTable,
+                   empty: String): DataFrame = {
+    val parts = t.read().map(_._2)
+    require(parts.nonEmpty, empty)
+    spark.read.parquet(parts: _*)
+  }
+
+  /** An AvailableNow append stream that hands each micro-batch to `f`. */
+  private def sink(df: DataFrame, checkpoint: String)(
+      f: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    df.writeStream
+      .outputMode("append")
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch((batch: DataFrame, batchId: Long) => f(batch, batchId))
 
   /** Landing-directory JSON stream of nested odds-API games. */
   def readOddsStream(spark: SparkSession, landingDir: String): DataFrame =
@@ -34,103 +73,33 @@ object StreamingIngest {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
 
-  /** Exactly-once canonical sink (r5 verdict item 8): foreachBatch +
-    * a per-batch transaction manifest, composing the streaming ingest
-    * with [[graft.sources.Snapshots.compact]]'s atomic-rename
-    * discipline.
-    *
-    * Each micro-batch publishes as its own `batch=<id>` partition
-    * via write-to-tmp → ONE directory rename → marker file in
-    * `_txn/`; the marker is the COMMIT POINT. Idempotence under
-    * every crash window:
-    *   - crash before the rename: only `__tmp_batch_*` garbage
-    *     exists; replay deletes and rewrites it;
-    *   - crash between rename and marker (the torn window): the data
-    *     directory exists but is INVISIBLE to
-    *     [[readCanonicalCommitted]] (no marker); replay deletes the
-    *     orphan and republishes;
-    *   - replay of a committed batch (Spark restarts deliver the same
-    *     batchId with the same data): the marker short-circuits — the
-    *     batch publishes exactly once.
-    * Readers go through [[readCanonicalCommitted]], which loads ONLY
-    * marker-committed partitions — a reader can never observe a torn
-    * batch. (Spark's parquet sink gets this from `_spark_metadata`;
-    * this manifest keeps the canonical table readable by ANY parquet
-    * reader given the tiny `_txn` listing, and composes with
-    * `Snapshots.latest`-style merge views downstream.)
+  /** Exactly-once canonical sink (r5 verdict item 8): each micro-batch
+    * publishes as `batch=<id>` under `_txn/<id>`, read back through
+    * [[readCanonicalCommitted]]. Unlike Spark's `_spark_metadata`, the
+    * tiny `_txn` listing keeps the table readable by ANY parquet reader.
     */
   def toCanonicalExactlyOnce(df: DataFrame, canonicalPath: String,
                              checkpoint: String): DataStreamWriter[Row] =
-    df.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        commitBatch(batch, canonicalPath, batchId)
-      }
+    sink(df, checkpoint)(commitBatch(_, canonicalPath, _))
 
-  /** One transactional batch publish; `afterPublish` is a test seam
-    * that fires INSIDE the torn window (after the data rename, before
-    * the marker) so crash-recovery is provable in a spec.
+  /** One transactional batch publish; `afterPublish` is the torn-window
+    * seam ([[graft.model.VersionedTable.commit]]).
     */
   private[graft] def commitBatch(batch: DataFrame, canonicalPath: String,
                                  batchId: Long,
                                  afterPublish: () => Unit = () => ())
-      : Unit = {
-    import org.apache.hadoop.fs.Path
-    val spark = batch.sparkSession
-    val root = new Path(canonicalPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new Path(root, s"_txn/$batchId")
-    if (fs.exists(marker)) return // committed on a previous attempt
-    val dataDir = new Path(root, s"batch=$batchId")
-    val tmpDir = new Path(root, s"__tmp_batch_$batchId")
-    // orphans from a crash inside either window
-    fs.delete(dataDir, true)
-    fs.delete(tmpDir, true)
-    batch.write.mode("overwrite").parquet(tmpDir.toString)
-    if (!fs.rename(tmpDir, dataDir))
-      throw new java.io.IOException(
-        s"commitBatch: cannot publish $tmpDir -> $dataDir")
-    afterPublish()
-    fs.mkdirs(new Path(root, "_txn"))
-    fs.create(marker, true).close()
-  }
+      : Unit =
+    canonical(batch.sparkSession, canonicalPath).commit(batchId,
+      afterPublish)(batch.write.mode("overwrite").parquet(_))
 
-  /** Exactly-once canonical sink WITH a near-dup admission gate (r6
-    * verdict item 7): [[toCanonicalExactlyOnce]]'s transactional
-    * publish composed with [[graft.dedup.Dedup.incrementalNearDup]]
-    * (q126) in foreachBatch — the streaming form of "reject re-crawls
-    * and light edits BEFORE they enter the corpus".
-    *
-    * Per micro-batch:
-    *   1. exact-dedup WITHIN the batch (first occurrence by id per
-    *      content fingerprint — a crawler batch routinely carries the
-    *      same page twice);
-    *   2. LSH-probe the survivors against the COMMITTED canonical
-    *      history and drop every doc whose best match clears
-    *      `threshold` (identical text has an identical signature, so
-    *      the near gate subsumes the exact one across batches);
-    *   3. publish the admitted rows through [[commitBatch]]'s
-    *      tmp → rename → marker transaction.
-    *
-    * The gate reads history via [[readCanonicalCommitted]] — ONLY
-    * marker-committed batches. That is what makes gate + sink
-    * exactly-once TOGETHER: after a crash inside the torn window the
-    * orphaned data directory is invisible to the gate, so the replay
-    * re-gates against precisely the state the failed attempt saw, and
-    * commitBatch republishes idempotently. (Gating against raw
-    * directory listings would double-count the torn batch as history
-    * and silently drop its own rows on replay.) Near-dups WITHIN one
-    * batch both admit by design — history is the committed corpus,
-    * and the within-batch clustering pass is a separate operator
-    * (q50's CC) with different semantics.
-    *
-    * Scale shape: the per-batch cost is q126's — signature collapse
-    * on both sides, banded equi-join, bounded-heap top-1; history
-    * signatures are recomputed per batch here, and at production
-    * scale the signature table would itself be a committed side
-    * output (same transaction), turning step 2 into a pure probe.
+  /** [[toCanonicalExactlyOnce]] behind a near-dup admission gate (r6,
+    * q126's [[graft.dedup.Dedup.incrementalNearDup]]): exact-dedup
+    * WITHIN the batch (first id per fingerprint), drop every survivor
+    * whose best LSH match in the history clears `threshold`, publish
+    * the rest. "Before" — the history — is [[readCanonicalCommitted]]:
+    * a torn batch is not history, so a replay re-gates against what the
+    * failed attempt saw and keeps its own rows. Near-dups WITHIN one
+    * batch both admit by design (q50's clustering pass handles them).
     */
   def toCanonicalGatedExactlyOnce(df: DataFrame, canonicalPath: String,
                                   checkpoint: String,
@@ -138,19 +107,13 @@ object StreamingIngest {
                                   textCol: String = "text",
                                   threshold: Double = 0.5)
       : DataStreamWriter[Row] =
-    df.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        commitBatch(gateBatch(batch, canonicalPath, idCol, textCol,
-          threshold), canonicalPath, batchId)
-      }
+    sink(df, checkpoint) { (batch, batchId) =>
+      commitBatch(gateBatch(batch, canonicalPath, idCol, textCol,
+        threshold), canonicalPath, batchId)
+    }
 
-  /** The admission gate for one micro-batch (driver-composed, lazily
-    * evaluated inside commitBatch's write — the marker short-circuit
-    * still skips all gate work on a committed replay... except the
-    * history listing, which is metadata-sized).
+  /** The admission gate for one micro-batch, evaluated lazily inside
+    * commitBatch's write: a committed replay lists the history only.
     */
   private[graft] def gateBatch(batch: DataFrame, canonicalPath: String,
                                idCol: String, textCol: String,
@@ -172,34 +135,14 @@ object StreamingIngest {
     }
   }
 
-  /** Streaming release-manifest maintenance (r12 — r11 verdict Next
-    * #6): the exactly-once canonical sink composed with a per-micro-
-    * batch DIRTY-SHARD delta, closing streaming ingest → incremental
-    * release the way the other families close streaming ≡ batch.
-    * Each trigger (1) publishes the batch through [[commitBatch]]'s
-    * tmp → rename → marker transaction, then (2) recomputes the
-    * [[graft.operators.Release.manifest]] for ONLY the buckets the
-    * batch touched — before vs after the commit — and writes the
-    * [[graft.operators.Release.dirtyShards]] rows to
-    * `deltaPath/batch=<id>`. Untouched buckets are PROVABLY clean
-    * (the manifest is per-bucket independent and the batch wrote
-    * nothing into them), so they never appear in a delta and never
-    * re-hash.
-    *
-    * Exactly-once discipline: the delta write is guarded by its own
-    * `_done/<id>` marker and derives "before" = committed batches
-    * MINUS this batch id, so a replay after any crash — before the
-    * data rename, inside the torn window, or between the canonical
-    * marker and the delta write — reproduces the identical delta.
-    *
-    * Scale shape: `touched` is a ≤`buckets`-element driver list (the
-    * distinct of a modulus); both manifests scan only the touched
-    * buckets' slice of the corpus and aggregate hashes, never text
-    * beyond chunking. A production refinement persists per-sequence
-    * fingerprints so only each touched bucket's tail sequences
-    * re-hash (append-only packing leaves earlier offsets untouched);
-    * the per-bucket restriction here is already the `buckets`-fold
-    * reduction that makes the recompute batch-proportional.
+  /** Streaming release-manifest maintenance (r12): per micro-batch,
+    * [[commitBatch]], then publish as `deltaPath/batch=<id>` under
+    * `_done/<id>` the [[graft.operators.Release.dirtyShards]] between
+    * the [[graft.operators.Release.manifest]]s before and after it,
+    * over ONLY the buckets the batch touched. "Before" is the committed
+    * canonical batches minus this one. Untouched buckets are PROVABLY
+    * clean (the manifest is per-bucket independent), so they never
+    * appear in a delta or re-hash.
     *
     * @param chunker (idCol, textCol) docs → (doc_id, chunk_idx,
     *                n_chunk_tokens, chunk_hash) chunk rows — the same
@@ -210,85 +153,49 @@ object StreamingIngest {
                                  chunker: DataFrame => DataFrame,
                                  capacity: Int, buckets: Int)
       : DataStreamWriter[Row] =
-    df.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        commitBatchWithDirtyShards(batch, canonicalPath, batchId,
-          deltaPath, chunker, capacity, buckets)
-      }
+    sink(df, checkpoint)(commitBatchWithDirtyShards(_, canonicalPath, _,
+      deltaPath, chunker, capacity, buckets))
 
   private[graft] def commitBatchWithDirtyShards(
       batch: DataFrame, canonicalPath: String, batchId: Long,
       deltaPath: String, chunker: DataFrame => DataFrame,
-      capacity: Int, buckets: Int): Unit = {
-    import org.apache.hadoop.fs.Path
+      capacity: Int, buckets: Int,
+      afterPublish: () => Unit = () => ()): Unit = {
     import graft.operators.Release
     import graft.sampling.Packing
     val spark = batch.sparkSession
     commitBatch(batch, canonicalPath, batchId) // idempotent
-    val root = new Path(deltaPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val done = new Path(root, s"_done/$batchId")
-    if (fs.exists(done)) return // delta published on a prior attempt
-    val canon = new Path(canonicalPath)
-    val cfs = canon.getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val committedIds = cfs.listStatus(new Path(canon, "_txn"))
-      .map(_.getPath.getName)
-      .flatMap(n => scala.util.Try(n.toLong).toOption).sorted
-    val beforeIds = committedIds.filter(_ != batchId)
-    // touched buckets: a ≤`buckets`-element list — driver-safe
-    val touched = spark.read
-      .parquet(s"$canonicalPath/batch=$batchId")
-      .select(pmod(col("doc_id"), lit(buckets)).cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    def manifestOf(ids: Seq[Long]): DataFrame = {
-      val slice = spark.read
-        .parquet(ids.map(i => s"$canonicalPath/batch=$i"): _*)
-        .filter(pmod(col("doc_id"), lit(buckets)).cast("int")
-          .isin(touched: _*))
-      Release.manifest(
-        Packing.packSequences(chunker(slice), capacity, buckets))
+    cycles(spark, deltaPath).commit(batchId, afterPublish) { out =>
+      val canon = canonical(spark, canonicalPath)
+      val committedIds = canon.ids
+      val beforeIds = committedIds.filter(_ != batchId)
+      // touched buckets: a ≤`buckets`-element list — driver-safe
+      val touched = spark.read.parquet(canon.path(batchId))
+        .select(pmod(col("doc_id"), lit(buckets)).cast("int").as("b"))
+        .distinct().collect().map(_.getInt(0)).toSeq
+      def manifestOf(ids: Seq[Long]): DataFrame = {
+        val slice = spark.read.parquet(ids.map(canon.path): _*)
+          .filter(pmod(col("doc_id"), lit(buckets)).cast("int")
+            .isin(touched: _*))
+        Release.manifest(
+          Packing.packSequences(chunker(slice), capacity, buckets))
+      }
+      val m1 = manifestOf(committedIds)
+      val m0 =
+        if (beforeIds.isEmpty) m1.filter(lit(false)) // cold start
+        else manifestOf(beforeIds)
+      Release.dirtyShards(m0, m1)
+        .withColumn("batch_id", lit(batchId))
+        .write.mode("overwrite").parquet(out)
     }
-    val m1 = manifestOf(committedIds.toSeq)
-    val m0 =
-      if (beforeIds.isEmpty) m1.filter(lit(false)) // cold start
-      else manifestOf(beforeIds.toSeq)
-    Release.dirtyShards(m0, m1)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").parquet(s"$deltaPath/batch=$batchId")
-    fs.mkdirs(new Path(root, "_done"))
-    fs.create(done, true).close()
   }
 
-  /** Streaming cluster-label maintenance (r13 — r12 verdict Next #5):
-    * the exactly-once canonical sink composed with the
-    * BATCH-PROPORTIONAL dedup cycle, closing streaming ingest →
-    * incremental dedup clusters. Per micro-batch:
-    *   1. publish the batch through [[commitBatch]]'s tmp → rename →
-    *      marker transaction;
-    *   2. persist the batch's SimHash signature DELTA
-    *      (`labelsPath/sigs/batch=<id>`) — the committed side output
-    *      the gate scaladoc promised: later cycles probe parquet
-    *      signatures, never re-hash history text;
-    *   3. discover edges with
-    *      [[graft.dedup.Dedup.simhashBatchEdges]] — the batch against
-    *      the UNION of prior committed signature deltas (and itself);
-    *   4. [[graft.dedup.Dedup.mergeClusters]] the edges into the
-    *      prior cycle's published label table and publish
-    *      `labelsPath/batch=<id>`;
-    * steps 2–4 sit under ONE `_done/<id>` marker: "before" derives
-    * from the canonical `_txn` listing minus this batch id, so a
-    * replay after any crash window recomputes the identical delta and
-    * labels from identical inputs. Per-cycle cost is the
-    * batch-proportional probe (DevCycleScale's measured flat leg)
-    * plus one label-table relabel join — never a full-corpus detector
-    * pass. Production refinement, stated: each cycle republishes the
-    * full label table (corpus-sized at 100 TB); the delta-publication
-    * variant (changed labels only, compacted periodically) is the
-    * same marker discipline over smaller files.
+  /** Streaming cluster-label maintenance (r13), full-republish form:
+    * each label cycle ([[commitLabelCycle]]) merges the batch's edges
+    * into the prior label table ([[graft.dedup.Dedup.mergeClusters]])
+    * and publishes all of it as `labelsPath/batch=<id>`: a
+    * batch-proportional probe, but a corpus-sized WRITE, which
+    * [[toCanonicalWithClusterLabelDeltas]] avoids.
     */
   def toCanonicalWithClusterLabels(df: DataFrame, canonicalPath: String,
                                    checkpoint: String,
@@ -297,60 +204,54 @@ object StreamingIngest {
                                    textCol: String = "text",
                                    maxHamming: Int = 3)
       : DataStreamWriter[Row] =
-    df.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        commitBatchWithClusterLabels(batch, canonicalPath, batchId,
-          labelsPath, idCol, textCol, maxHamming)
-      }
+    sink(df, checkpoint)(commitBatchWithClusterLabels(_, canonicalPath, _,
+      labelsPath, idCol, textCol, maxHamming))
 
   private[graft] def commitBatchWithClusterLabels(
       batch: DataFrame, canonicalPath: String, batchId: Long,
       labelsPath: String, idCol: String, textCol: String,
-      maxHamming: Int): Unit = {
-    import org.apache.hadoop.fs.Path
-    import graft.dedup.Dedup
+      maxHamming: Int, afterPublish: () => Unit = () => ()): Unit = {
+    val labels = cycles(batch.sparkSession, labelsPath)
+    commitLabelCycle(batch, canonicalPath, batchId, labels, labelsPath,
+      idCol, textCol, maxHamming, afterPublish)(
+      ids => batch.sparkSession.read.parquet(labels.path(ids.max)),
+      Dedup.mergeClusters(_, _, validate = false))
+  }
+
+  /** One label cycle: [[commitBatch]], then under `_done/<id>` the
+    * batch's SimHash signatures (`sigs/batch=<id>`, so later cycles
+    * never re-hash history text) and `merge(prior, edges)`. "Before" is
+    * the committed canonical batches minus this one: `prior` of their
+    * ids, edges against their signatures. `prior` is this loop's OWN
+    * output, so `merge` may skip the min-label validation.
+    */
+  private def commitLabelCycle(
+      batch: DataFrame, canonicalPath: String, batchId: Long,
+      labels: VersionedTable, labelsPath: String, idCol: String,
+      textCol: String, maxHamming: Int, afterPublish: () => Unit)(
+      prior: Seq[Long] => DataFrame,
+      merge: (DataFrame, DataFrame) => DataFrame): Unit = {
     val spark = batch.sparkSession
     commitBatch(batch, canonicalPath, batchId) // idempotent
-    val root = new Path(labelsPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val done = new Path(root, s"_done/$batchId")
-    if (fs.exists(done)) return // labels published on a prior attempt
-    val canon = new Path(canonicalPath)
-    val cfs = canon.getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val beforeIds = cfs.listStatus(new Path(canon, "_txn"))
-      .map(_.getPath.getName)
-      .flatMap(n => scala.util.Try(n.toLong).toOption)
-      .filter(_ != batchId).sorted
-    val batchDf = spark.read
-      .parquet(s"$canonicalPath/batch=$batchId")
-      .select(col(idCol), col(textCol))
-    Dedup.simhashSignatures(batchDf, idCol, textCol)
-      .write.mode("overwrite")
-      .parquet(s"$labelsPath/sigs/batch=$batchId")
-    val servedSigs =
-      if (beforeIds.isEmpty)
-        spark.read.parquet(s"$labelsPath/sigs/batch=$batchId")
-          .filter(lit(false)) // cold start: empty served table
-      else spark.read.parquet(
-        beforeIds.map(i => s"$labelsPath/sigs/batch=$i").toSeq: _*)
-    val prior =
-      if (beforeIds.isEmpty)
-        batchDf.select(col(idCol).as("doc_id"),
-          col(idCol).as("cluster_id")).filter(lit(false))
-      else spark.read.parquet(s"$labelsPath/batch=${beforeIds.max}")
-    val edges = Dedup.simhashBatchEdges(batchDf, servedSigs,
-      idCol, textCol, maxHamming)
-    // prior labels are this loop's OWN committed output — the
-    // min-label invariant holds by construction; skip the per-cycle
-    // validation probe (mergeClusters' documented trusted-chain hatch)
-    Dedup.mergeClusters(prior, edges, validate = false)
-      .write.mode("overwrite").parquet(s"$labelsPath/batch=$batchId")
-    fs.mkdirs(new Path(root, "_done"))
-    fs.create(done, true).close()
+    labels.commit(batchId, afterPublish) { out =>
+      val canon = canonical(spark, canonicalPath)
+      val sigs = cycles(spark, labelsPath, "sigs")
+      val beforeIds = canon.ids.filter(_ != batchId)
+      val batchDf = spark.read.parquet(canon.path(batchId))
+        .select(col(idCol), col(textCol))
+      Dedup.simhashSignatures(batchDf, idCol, textCol)
+        .write.mode("overwrite").parquet(sigs.path(batchId))
+      val (servedSigs, priorLabels) =
+        if (beforeIds.isEmpty) // cold start: empty served tables
+          (spark.read.parquet(sigs.path(batchId)).filter(lit(false)),
+            batchDf.select(col(idCol).as("doc_id"),
+              col(idCol).as("cluster_id")).filter(lit(false)))
+        else (spark.read.parquet(beforeIds.map(sigs.path): _*),
+          prior(beforeIds))
+      val edges = Dedup.simhashBatchEdges(batchDf, servedSigs,
+        idCol, textCol, maxHamming)
+      merge(priorLabels, edges).write.mode("overwrite").parquet(out)
+    }
   }
 
   /** The served duplicate-cluster label table: the highest committed
@@ -359,33 +260,20 @@ object StreamingIngest {
     */
   def readClusterLabels(spark: SparkSession,
                         labelsPath: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(labelsPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val doneDir = new Path(root, "_done")
-    val ids =
-      if (!fs.exists(doneDir)) Array.empty[Long]
-      else fs.listStatus(doneDir).map(_.getPath.getName)
-        .flatMap(n => scala.util.Try(n.toLong).toOption).sorted
+    val labels = cycles(spark, labelsPath)
+    val ids = labels.ids
     require(ids.nonEmpty,
       s"readClusterLabels: no published label cycles under $labelsPath")
-    spark.read.parquet(s"$labelsPath/batch=${ids.max}")
+    spark.read.parquet(labels.path(ids.max))
   }
 
-  /** DELTA-publication cluster-label maintenance (r13 — the scale
-    * refinement [[toCanonicalWithClusterLabels]]' scaladoc states):
-    * same cycle (publish canonical → persist signature delta →
-    * batch-vs-served edge probe → label merge) under the same ONE
-    * `_done/<id>` marker, but each cycle publishes ONLY the label
-    * rows it creates or changes
-    * ([[graft.dedup.Dedup.mergeClustersDelta]]) to
-    * `labelsPath/delta/batch=<id>` — touched-cluster-sized, never
-    * corpus-sized. The served table is the latest-wins overlay
-    * ([[readClusterLabelsOverlay]]); [[compactClusterLabels]]
-    * periodically folds committed deltas into a versioned base so
-    * the overlay's delta list stays short. A `labelsPath` belongs to
-    * exactly one variant — full-republish and delta cycles don't mix
-    * under one root.
+  /** DELTA-publication cluster-label maintenance (r13): the same label
+    * cycle, but it publishes ONLY the label rows it creates or changes
+    * ([[graft.dedup.Dedup.mergeClustersDelta]]) as
+    * `labelsPath/delta/batch=<id>`, touched-cluster-sized. The served
+    * table is the overlay ([[readClusterLabelsOverlay]]), which
+    * [[compactClusterLabels]] folds into a base. A `labelsPath` belongs
+    * to one variant: full-republish and delta cycles don't mix.
     */
   def toCanonicalWithClusterLabelDeltas(df: DataFrame,
                                         canonicalPath: String,
@@ -395,269 +283,97 @@ object StreamingIngest {
                                         textCol: String = "text",
                                         maxHamming: Int = 3)
       : DataStreamWriter[Row] =
-    df.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        commitBatchWithClusterLabelDeltas(batch, canonicalPath,
-          batchId, labelsPath, idCol, textCol, maxHamming)
-      }
+    sink(df, checkpoint)(commitBatchWithClusterLabelDeltas(_,
+      canonicalPath, _, labelsPath, idCol, textCol, maxHamming))
 
   private[graft] def commitBatchWithClusterLabelDeltas(
       batch: DataFrame, canonicalPath: String, batchId: Long,
       labelsPath: String, idCol: String, textCol: String,
-      maxHamming: Int): Unit = {
-    import org.apache.hadoop.fs.Path
-    import graft.dedup.Dedup
-    val spark = batch.sparkSession
-    commitBatch(batch, canonicalPath, batchId) // idempotent
-    val root = new Path(labelsPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val done = new Path(root, s"_done/$batchId")
-    if (fs.exists(done)) return // delta published on a prior attempt
-    val canon = new Path(canonicalPath)
-    val cfs = canon.getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    // "before" derives from the canonical _txn listing minus this
-    // batch id — identical on any replay, so the recomputed delta is
-    // bit-identical across every crash window
-    val beforeIds = cfs.listStatus(new Path(canon, "_txn"))
-      .map(_.getPath.getName)
-      .flatMap(n => scala.util.Try(n.toLong).toOption)
-      .filter(_ != batchId).sorted
-    val batchDf = spark.read
-      .parquet(s"$canonicalPath/batch=$batchId")
-      .select(col(idCol), col(textCol))
-    Dedup.simhashSignatures(batchDf, idCol, textCol)
-      .write.mode("overwrite")
-      .parquet(s"$labelsPath/sigs/batch=$batchId")
-    val servedSigs =
-      if (beforeIds.isEmpty)
-        spark.read.parquet(s"$labelsPath/sigs/batch=$batchId")
-          .filter(lit(false)) // cold start: empty served table
-      else spark.read.parquet(
-        beforeIds.map(i => s"$labelsPath/sigs/batch=$i").toSeq: _*)
-    // prior labels = the overlay of base + deltas committed BEFORE
-    // this batch (never this cycle's own torn output)
-    val prior =
-      if (beforeIds.isEmpty)
-        batchDf.select(col(idCol).as("doc_id"),
-          col(idCol).as("cluster_id")).filter(lit(false))
-      else labelsOverlay(spark, labelsPath, beforeIds)
-    val edges = Dedup.simhashBatchEdges(batchDf, servedSigs,
-      idCol, textCol, maxHamming)
-    // prior labels are this loop's OWN committed output — min-label
-    // invariant holds by construction (mergeClusters' trusted-chain
-    // hatch)
-    Dedup.mergeClustersDelta(prior, edges, validate = false)
-      .write.mode("overwrite")
-      .parquet(s"$labelsPath/delta/batch=$batchId")
-    fs.mkdirs(new Path(root, "_done"))
-    fs.create(done, true).close()
+      maxHamming: Int, afterPublish: () => Unit = () => ()): Unit = {
+    val labels = labelDeltas(batch.sparkSession, labelsPath)
+    commitLabelCycle(batch, canonicalPath, batchId, labels, labelsPath,
+      idCol, textCol, maxHamming, afterPublish)(
+      ids => labels.overlay(Seq("doc_id"), ids.toSet),
+      Dedup.mergeClustersDelta(_, _, validate = false))
   }
 
-  /** Marker-committed cycle ids under a delta-label root. */
-  private def committedLabelIds(spark: SparkSession,
-                                labelsPath: String): Array[Long] = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(labelsPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val doneDir = new Path(root, "_done")
-    if (!fs.exists(doneDir)) Array.empty[Long]
-    else fs.listStatus(doneDir).map(_.getPath.getName)
-      .flatMap(n => scala.util.Try(n.toLong).toOption).sorted
-  }
-
-  /** Highest committed compaction version under a delta-label root,
-    * if any ([[compactClusterLabels]] output).
-    */
-  private def committedBaseVersion(spark: SparkSession,
-                                   labelsPath: String): Option[Long] = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(labelsPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val baseDone = new Path(root, "_basedone")
-    if (!fs.exists(baseDone)) None
-    else fs.listStatus(baseDone).map(_.getPath.getName)
-      .flatMap(n => scala.util.Try(n.toLong).toOption)
-      .sorted.lastOption
-  }
-
-  /** The latest-wins overlay over `ids`' committed deltas, starting
-    * from the highest compacted base that does not exceed them: one
-    * row per doc, the row written by the highest cycle that touched
-    * it (relabels only ever move a doc's cluster root down-merge, so
-    * latest-wins IS the merged table). The overlay window shuffles
-    * doc-keyed label rows — corpus-sized, like any full read of the
-    * served table; the point of the delta scheme is that each cycle's
-    * WRITE (and the shipper's diff) is touched-cluster-sized.
-    */
-  private def labelsOverlay(spark: SparkSession, labelsPath: String,
-                            ids: Seq[Long]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val base = committedBaseVersion(spark, labelsPath)
-      .filter(v => ids.contains(v))
-    val deltaIds = base match {
-      case Some(v) => ids.filter(_ > v)
-      case None => ids
-    }
-    val parts =
-      base.map(v => spark.read
-          .parquet(s"$labelsPath/base/version=$v")
-          .withColumn("__ord", lit(v))).toSeq ++
-        deltaIds.map(i => spark.read
-          .parquet(s"$labelsPath/delta/batch=$i")
-          .withColumn("__ord", lit(i)))
-    require(parts.nonEmpty,
-      s"labelsOverlay: no committed label cycles under $labelsPath")
-    val all = parts.reduce(_ unionByName _)
-    val w = Window.partitionBy(col("doc_id"))
-      .orderBy(col("__ord").desc)
-    all.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .select(col("doc_id"), col("cluster_id"))
-  }
-
-  /** The served label table under the DELTA scheme: base (if
-    * compacted) overlaid with every committed delta, latest-wins per
-    * doc. Fails loudly before the first committed cycle.
+  /** The served DELTA-scheme label table: base plus deltas, latest
+    * wins per doc (relabels only move a root down-merge, so latest-wins
+    * IS the merged table). Fails loudly before the first cycle.
     */
   def readClusterLabelsOverlay(spark: SparkSession,
                                labelsPath: String): DataFrame = {
-    val ids = committedLabelIds(spark, labelsPath)
-    require(ids.nonEmpty, s"readClusterLabelsOverlay: no published " +
-      s"label cycles under $labelsPath")
-    labelsOverlay(spark, labelsPath, ids)
+    val labels = labelDeltas(spark, labelsPath)
+    require(labels.ids.nonEmpty, s"readClusterLabelsOverlay: no " +
+      s"published label cycles under $labelsPath")
+    labels.overlay(Seq("doc_id"))
   }
 
-  /** Fold every committed delta (and any prior base) into ONE
-    * versioned base — `base/version=<maxCycle>` committed by a
-    * `_basedone/<maxCycle>` marker — so [[readClusterLabelsOverlay]]'s
-    * delta list resets to the cycles that arrive afterwards. Same
-    * tmp → rename → marker transaction as [[commitBatch]]: a torn
-    * compaction is invisible (no marker) and a re-run republishes it;
-    * compacting twice at the same high-water mark short-circuits.
-    * Old deltas/bases are left in place (readers pin to the HIGHEST
-    * committed base), so compaction never races a concurrent reader;
-    * pruning superseded files is an offline GC decision.
+  /** Fold the overlay into `base/version=<maxCycle>` under
+    * `_basedone/<maxCycle>`, so [[readClusterLabelsOverlay]] reads the
+    * base plus later cycles only. "Before" is the overlay at that
+    * high-water mark. Old deltas and bases stay until [[gcClusterLabels]].
     */
-  def compactClusterLabels(spark: SparkSession,
-                           labelsPath: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val ids = committedLabelIds(spark, labelsPath)
-    require(ids.nonEmpty,
-      s"compactClusterLabels: no published label cycles under " +
-        s"$labelsPath")
-    val version = ids.max
-    val root = new Path(labelsPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new Path(root, s"_basedone/$version")
-    if (fs.exists(marker)) return // already compacted at this mark
-    val tmp = new Path(root, s"base/__tmp_version_$version")
-    fs.delete(tmp, true)
-    labelsOverlay(spark, labelsPath, ids)
-      .write.mode("overwrite").parquet(tmp.toString)
-    val dest = new Path(root, s"base/version=$version")
-    fs.delete(dest, true)
-    require(fs.rename(tmp, dest),
-      s"compactClusterLabels: rename $tmp -> $dest failed")
-    fs.mkdirs(new Path(root, "_basedone"))
-    fs.create(marker, true).close()
+  def compactClusterLabels(spark: SparkSession, labelsPath: String): Unit =
+    compactClusterLabels(spark, labelsPath, () => ())
+
+  private[graft] def compactClusterLabels(spark: SparkSession,
+      labelsPath: String, afterPublish: () => Unit): Unit = {
+    val labels = labelDeltas(spark, labelsPath)
+    val ids = labels.ids
+    require(ids.nonEmpty, s"compactClusterLabels: no published label " +
+      s"cycles under $labelsPath")
+    labelBases(spark, labelsPath).commit(ids.max, afterPublish)(
+      labels.overlay(Seq("doc_id")).write.mode("overwrite").parquet(_))
   }
 
   /** Prune label deltas and bases SUPERSEDED by the highest committed
-    * compaction — the offline GC [[compactClusterLabels]]' scaladoc
-    * defers: every delta with id ≤ base version (its rows are folded
-    * into the base) and every older base. Safe under the stated
-    * single-writer/pinned-reader discipline (readers resolve the
-    * HIGHEST committed base first, so nothing reads the pruned
-    * files); `_done` markers stay — they are the committed-cycle
-    * ledger replay short-circuits and sig listings key on, not data.
-    * No-op before the first compaction. Returns the pruned paths.
+    * compaction ([[graft.model.VersionedTable.gc]]). Signature deltas
+    * stay: later cycles probe them. No-op before the first compaction.
+    * Returns the pruned paths.
     */
   def gcClusterLabels(spark: SparkSession,
-                      labelsPath: String): Seq[String] = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(labelsPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    committedBaseVersion(spark, labelsPath) match {
-      case None => Seq.empty
-      case Some(v) =>
-        val supersededDeltas = committedLabelIds(spark, labelsPath)
-          .filter(_ <= v)
-          .map(i => new Path(root, s"delta/batch=$i"))
-        val baseDir = new Path(root, "base")
-        val supersededBases =
-          if (!fs.exists(baseDir)) Array.empty[Path]
-          else fs.listStatus(baseDir).map(_.getPath).filter { p =>
-            val n = p.getName
-            n.startsWith("version=") &&
-              scala.util.Try(n.stripPrefix("version=").toLong)
-                .toOption.exists(_ < v) ||
-              n.startsWith("__tmp_") // torn compactions
-          }
-        (supersededDeltas ++ supersededBases).filter(fs.exists)
-          .map { p => fs.delete(p, true); p.toString }.toSeq
-    }
-  }
+                      labelsPath: String): Seq[String] =
+    labelDeltas(spark, labelsPath).gc()
 
-  // ------------------------------------------------------------------
-  // Streaming IVF index maintenance (r13): streaming embedding ingest
-  // → incremental ANN serving, the vector twin of the cluster-label
-  // loop. Layout under indexPath:
-  //   base/upto=<b>    versioned (centroids, assignments) pair
-  //                    (Artifacts.saveIvfIndex format) absorbing every
-  //                    delta with id ≤ b; committed by _ivfbase/<b>
-  //   delta/batch=<id> cell-partitioned assignment delta per
-  //                    micro-batch; committed by _done/<id>
-  // Single-writer discipline, stated: one maintenance loop owns an
-  // indexPath — refreshes run between stream runs (AvailableNow makes
-  // that natural), never concurrently with an in-flight micro-batch.
-  // ------------------------------------------------------------------
+  // Streaming IVF maintenance (r13), the label loop's vector twin:
+  // base/upto=<b> (centroids + assignments folding deltas ≤ b) under
+  // _ivfbase/<b>; cell-partitioned delta/batch=<id> under _done/<id>.
 
-  /** Publish the initial index version (fitted centroids, no members
-    * yet) — the cold-start artifact the streaming assigner routes
-    * against. Must run once before the first micro-batch.
+  /** Publish the first index base (fitted centroids, no members yet),
+    * which the first micro-batch routes against: run it once before.
     */
   def seedIvfIndex(spark: SparkSession, indexPath: String,
-                   centroids: Seq[Array[Double]]): Unit = {
-    import org.apache.hadoop.fs.Path
+                   centroids: Seq[Array[Double]]): Unit =
+    seedIvfIndex(spark, indexPath, centroids, () => ())
+
+  private[graft] def seedIvfIndex(spark: SparkSession, indexPath: String,
+      centroids: Seq[Array[Double]], afterPublish: () => Unit): Unit = {
     require(centroids.nonEmpty, "seedIvfIndex: centroids required")
-    val root = new Path(indexPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new Path(root, "_ivfbase/-1")
-    if (fs.exists(marker)) return
-    graft.model.Artifacts.saveCentroids(spark,
-      s"$indexPath/base/upto=-1/centroids", centroids)
-    fs.mkdirs(new Path(root, "_ivfbase"))
-    fs.create(marker, true).close()
+    ivfBases(spark, indexPath).commit(-1L, afterPublish)(out =>
+      Artifacts.saveCentroids(spark, s"$out/centroids", centroids))
   }
 
-  private def committedIvfBase(spark: SparkSession,
-                               indexPath: String): Long = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(indexPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dir = new Path(root, "_ivfbase")
-    val vs =
-      if (!fs.exists(dir)) Array.empty[Long]
-      else fs.listStatus(dir).map(_.getPath.getName)
-        .flatMap(n => scala.util.Try(n.toLong).toOption)
+  /** The highest committed index base version. */
+  private def ivfBase(spark: SparkSession, indexPath: String): Long = {
+    val vs = ivfBases(spark, indexPath).ids
     require(vs.nonEmpty, s"streaming IVF: no committed index base " +
       s"under $indexPath — run seedIvfIndex first")
     vs.max
   }
 
-  /** Exactly-once canonical vector sink + per-micro-batch IVF
-    * assignment delta: each batch publishes through [[commitBatch]],
-    * then routes its vectors against the CURRENT served centroids
-    * (the highest committed base — so a refresh between stream runs
-    * takes effect on the next batch) and publishes the
-    * cell-partitioned assignment delta under its own `_done/<id>`
-    * marker. Assignment is stateless given the centroids, so a
-    * replayed batch recomputes a consistent delta whichever base is
-    * current at replay time.
+  /** The served centroids: the highest committed base's. */
+  private def ivfCentroids(spark: SparkSession,
+                           indexPath: String): Seq[Array[Double]] = {
+    val base = ivfBases(spark, indexPath).path(ivfBase(spark, indexPath))
+    Artifacts.loadCentroids(spark, s"$base/centroids")
+  }
+
+  /** Per micro-batch, [[commitBatch]], then route its vectors against
+    * the served centroids and publish the assignment delta. "Before" is
+    * the highest committed base at (re)play time: assignment is
+    * stateless given the centroids, so a refresh between stream runs
+    * takes effect on the next batch and a replay stays consistent.
     */
   def toCanonicalWithIvfAssignments(df: DataFrame,
                                     canonicalPath: String,
@@ -666,196 +382,108 @@ object StreamingIngest {
                                     idCol: String = "vec_id",
                                     vecCol: String = "embedding")
       : DataStreamWriter[Row] =
-    df.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        commitBatchWithIvfAssignments(batch, canonicalPath, batchId,
-          indexPath, idCol, vecCol)
-      }
+    sink(df, checkpoint)(commitBatchWithIvfAssignments(_, canonicalPath,
+      _, indexPath, idCol, vecCol))
 
   private[graft] def commitBatchWithIvfAssignments(
       batch: DataFrame, canonicalPath: String, batchId: Long,
-      indexPath: String, idCol: String, vecCol: String): Unit = {
-    import org.apache.hadoop.fs.Path
+      indexPath: String, idCol: String, vecCol: String,
+      afterPublish: () => Unit = () => ()): Unit = {
     val spark = batch.sparkSession
     commitBatch(batch, canonicalPath, batchId) // idempotent
-    val root = new Path(indexPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val done = new Path(root, s"_done/$batchId")
-    if (fs.exists(done)) return // delta published on a prior attempt
-    val base = committedIvfBase(spark, indexPath)
-    val cents = graft.model.Artifacts.loadCentroids(spark,
-      s"$indexPath/base/upto=$base/centroids")
-    spark.read.parquet(s"$canonicalPath/batch=$batchId")
-      .select(col(idCol), col(vecCol))
-      .withColumn("cell", graft.sim.VectorExpressions
-        .centroidAssign(col(vecCol), cents).getField("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$indexPath/delta/batch=$batchId")
-    fs.mkdirs(new Path(root, "_done"))
-    fs.create(done, true).close()
+    ivfDeltas(spark, indexPath).commit(batchId, afterPublish) { out =>
+      val cents = ivfCentroids(spark, indexPath)
+      spark.read.parquet(canonical(spark, canonicalPath).path(batchId))
+        .select(col(idCol), col(vecCol))
+        .withColumn("cell", graft.sim.VectorExpressions
+          .centroidAssign(col(vecCol), cents).getField("cell"))
+        .write.mode("overwrite").partitionBy("cell").parquet(out)
+    }
   }
 
-  /** The served IVF index under the streaming loop: the highest
-    * committed base's centroids, and its assignments unioned with
-    * every committed delta it has not absorbed. Fails loudly before
-    * any vectors have been ingested or folded.
+  /** The served IVF index: the highest committed base's centroids and
+    * assignments, plus every committed delta past it. Fails loudly
+    * before any vectors have been ingested.
     */
   def readIvfServing(spark: SparkSession, indexPath: String)
       : (Seq[Array[Double]], DataFrame) = {
-    import org.apache.hadoop.fs.Path
-    val base = committedIvfBase(spark, indexPath)
-    val cents = graft.model.Artifacts.loadCentroids(spark,
-      s"$indexPath/base/upto=$base/centroids")
-    val root = new Path(indexPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val deltaIds = committedLabelIds(spark, indexPath).filter(_ > base)
-    val parts =
-      (if (fs.exists(new Path(root, s"base/upto=$base/assignments")))
-        Seq(spark.read
-          .parquet(s"$indexPath/base/upto=$base/assignments"))
-      else Seq.empty) ++
-        deltaIds.map(i =>
-          spark.read.parquet(s"$indexPath/delta/batch=$i"))
+    val cents = ivfCentroids(spark, indexPath)
+    val parts = ivfDeltas(spark, indexPath).read(baseData = "assignments")
+      .map { case (_, p) => spark.read.parquet(p) }
     require(parts.nonEmpty, s"readIvfServing: no assignments under " +
       s"$indexPath (no vectors ingested yet)")
     val cols = parts.head.columns.sorted.map(col)
     (cents, parts.map(_.select(cols.toSeq: _*)).reduce(_ unionByName _))
   }
 
-  /** One maintenance cycle over the streaming index: audit the SERVED
-    * assignments ([[graft.sim.Similarity.ivfAssignedCellStats]] — the
-    * routing as served, not as rebuilt), refresh the dirty cells
-    * ([[graft.sim.Similarity.ivfRefreshDirtyCells]]: refit from
-    * current members, reassign only the dirty slice), and publish the
-    * composed serving table as the next versioned base absorbing
-    * every committed delta — tmp → rename → `_ivfbase/<b>` marker, so
-    * a torn refresh is invisible and a re-run at the same high-water
-    * mark short-circuits. Even a zero-dirty cycle folds the deltas
-    * (the compaction benefit); the next micro-batch routes against
-    * the refreshed centroids.
+  /** One maintenance cycle: audit the SERVED assignments, refit and
+    * re-route the dirty cells ([[graft.sim.Similarity]]), and publish
+    * the result as `base/upto=<b>` under `_ivfbase/<b>`, `b` the highest
+    * committed id. "Before" is the served index. Even a zero-dirty
+    * cycle folds the deltas. Run it between stream runs.
     */
   def refreshIvfServing(spark: SparkSession, indexPath: String,
                         maxOccupancy: Long, minMeanAffinity: Double,
                         idCol: String = "vec_id",
-                        vecCol: String = "embedding"): Unit = {
-    import org.apache.hadoop.fs.Path
+                        vecCol: String = "embedding"): Unit =
+    refreshIvfServing(spark, indexPath, maxOccupancy, minMeanAffinity,
+      idCol, vecCol, () => ())
+
+  private[graft] def refreshIvfServing(spark: SparkSession,
+      indexPath: String, maxOccupancy: Long, minMeanAffinity: Double,
+      idCol: String, vecCol: String, afterPublish: () => Unit): Unit = {
     import graft.sim.Similarity
-    val root = new Path(indexPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ids = committedLabelIds(spark, indexPath)
-    val prevBase = committedIvfBase(spark, indexPath)
-    val b = (ids :+ prevBase).max
-    val marker = new Path(root, s"_ivfbase/$b")
-    if (fs.exists(marker)) return // already refreshed at this mark
-    val (cents, assigned0) = readIvfServing(spark, indexPath)
-    val assigned = assigned0
-      .select(col(idCol), col(vecCol), col("cell"))
-    val stats = Similarity.ivfAssignedCellStats(assigned, cents,
-      idCol, vecCol)
-    val dirty = Similarity.dirtyCellsFromStats(stats, maxOccupancy,
-      minMeanAffinity)
-    val (updated, reassigned) = Similarity.ivfRefreshDirtyCells(
-      assigned, cents, dirty, idCol, vecCol)
-    val serving =
-      if (dirty.isEmpty) assigned
-      else assigned
-        .filter(!col("cell").isin(dirty.map(Int.box): _*))
-        .unionByName(reassigned)
-    val tmp = new Path(root, s"base/__tmp_upto_$b")
-    fs.delete(tmp, true)
-    graft.model.Artifacts.saveCentroids(spark,
-      s"$tmp/centroids", updated)
-    serving.write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$tmp/assignments")
-    val dest = new Path(root, s"base/upto=$b")
-    fs.delete(dest, true)
-    require(fs.rename(tmp, dest),
-      s"refreshIvfServing: rename $tmp -> $dest failed")
-    fs.mkdirs(new Path(root, "_ivfbase"))
-    fs.create(marker, true).close()
+    val b = (ivfDeltas(spark, indexPath).ids :+
+      ivfBase(spark, indexPath)).max
+    ivfBases(spark, indexPath).commit(b, afterPublish) { out =>
+      val (cents, assigned0) = readIvfServing(spark, indexPath)
+      val assigned = assigned0
+        .select(col(idCol), col(vecCol), col("cell"))
+      val stats = Similarity.ivfAssignedCellStats(assigned, cents,
+        idCol, vecCol)
+      val dirty = Similarity.dirtyCellsFromStats(stats, maxOccupancy,
+        minMeanAffinity)
+      val (updated, reassigned) = Similarity.ivfRefreshDirtyCells(
+        assigned, cents, dirty, idCol, vecCol)
+      val serving =
+        if (dirty.isEmpty) assigned
+        else assigned
+          .filter(!col("cell").isin(dirty.map(Int.box): _*))
+          .unionByName(reassigned)
+      Artifacts.saveCentroids(spark, s"$out/centroids", updated)
+      serving.write.mode("overwrite").partitionBy("cell")
+        .parquet(s"$out/assignments")
+    }
   }
 
-  /** [[gcClusterLabels]]' IVF twin: prune assignment deltas absorbed
-    * by the highest committed base (id ≤ base) and every older base
-    * — including the seed (`upto=-1`) once a real base exists. Same
-    * safety argument: readers pin to the highest committed base, the
-    * maintenance loop is single-writer, `_done` markers stay. Returns
-    * the pruned paths.
+  /** [[gcClusterLabels]]' IVF twin; the seed (`upto=-1`) goes once a
+    * later base exists. Returns the pruned paths.
     */
-  def gcIvfIndex(spark: SparkSession, indexPath: String): Seq[String] = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(indexPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val b = committedIvfBase(spark, indexPath)
-    val supersededDeltas = committedLabelIds(spark, indexPath)
-      .filter(_ <= b)
-      .map(i => new Path(root, s"delta/batch=$i"))
-    val baseDir = new Path(root, "base")
-    val supersededBases =
-      if (!fs.exists(baseDir)) Array.empty[Path]
-      else fs.listStatus(baseDir).map(_.getPath).filter { p =>
-        val n = p.getName
-        n.startsWith("upto=") &&
-          scala.util.Try(n.stripPrefix("upto=").toLong)
-            .toOption.exists(_ < b) ||
-          n.startsWith("__tmp_") // torn refreshes
-      }
-    (supersededDeltas ++ supersededBases).filter(fs.exists)
-      .map { p => fs.delete(p, true); p.toString }.toSeq
-  }
+  def gcIvfIndex(spark: SparkSession, indexPath: String): Seq[String] =
+    ivfDeltas(spark, indexPath).gc()
 
-  /** The dirty-shard deltas published so far — one row per (batch,
-    * touched bucket) with the dirty verdict, the incremental-release
-    * work list a downstream shipper consumes.
+  /** The dirty-shard deltas published so far: one row per (batch,
+    * touched bucket), the work list a downstream shipper consumes.
     */
   def readDirtyShardDeltas(spark: SparkSession,
-                           deltaPath: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(deltaPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val doneDir = new Path(root, "_done")
-    val ids =
-      if (!fs.exists(doneDir)) Array.empty[Long]
-      else fs.listStatus(doneDir).map(_.getPath.getName)
-        .flatMap(n => scala.util.Try(n.toLong).toOption).sorted
-    require(ids.nonEmpty,
+                           deltaPath: String): DataFrame =
+    load(spark, cycles(spark, deltaPath),
       s"readDirtyShardDeltas: no published deltas under $deltaPath")
-    spark.read.parquet(ids.map(i => s"$deltaPath/batch=$i"): _*)
-  }
 
   /** [[readCanonicalCommitted]] tolerating an empty table (None before
     * the first committed batch — the gate's cold start).
     */
   def readCanonicalCommittedOpt(spark: SparkSession,
                                 canonicalPath: String)
-      : Option[DataFrame] = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(canonicalPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val txn = new Path(root, "_txn")
-    if (!fs.exists(txn) || fs.listStatus(txn).isEmpty) None
+      : Option[DataFrame] =
+    if (canonical(spark, canonicalPath).ids.isEmpty) None
     else Some(readCanonicalCommitted(spark, canonicalPath))
-  }
 
   /** Only marker-committed batch partitions — the exactly-once view. */
   def readCanonicalCommitted(spark: SparkSession,
-                             canonicalPath: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(canonicalPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val txn = new Path(root, "_txn")
-    val ids =
-      if (!fs.exists(txn)) Array.empty[Long]
-      else fs.listStatus(txn).map(_.getPath.getName)
-        .flatMap(n => scala.util.Try(n.toLong).toOption).sorted
-    require(ids.nonEmpty,
+                             canonicalPath: String): DataFrame =
+    load(spark, canonical(spark, canonicalPath),
       s"readCanonicalCommitted: no committed batches under $canonicalPath")
-    spark.read.parquet(
-      ids.map(i => s"$canonicalPath/batch=$i"): _*)
-  }
 
   /** Event-time tumbling/sliding window aggregate with watermark over
     * an event stream (`ts`, `event_type`, `value`) — the engine

@@ -40,6 +40,25 @@ class GraftSessionSpec extends SparkSpec {
     assert(confs.toMap.get(key) == Some("64"))
   }
 
+  test("every catalog query applies the one query conf list") {
+    assert(GraftSession.queryConfs == Seq(
+      "spark.sql.ansi.enabled" -> "false",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1m"))
+    // a session a caller built with other values gets the list anyway
+    val session = spark.newSession()
+    Seq("spark.sql.ansi.enabled" -> "true",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "false",
+      "spark.sql.session.timeZone" -> "America/New_York",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64m")
+      .foreach { case (k, v) => session.conf.set(k, v) }
+    val rows = GraftSession.query((s, _) => s.range(3).toDF())(session, "")
+    assert(rows.count() == 3L)
+    GraftSession.queryConfs.foreach { case (k, v) =>
+      assert(session.conf.get(k) == v, k) }
+  }
+
   test("in the test session a generated class outlives 150 other compiles") {
     // the session comes first: the first one in the JVM sizes the cache
     assert(spark.conf.get(key) == GraftSession.CodegenCacheMaxEntries.toString)
